@@ -1,31 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Shared bench environment: tmpfs scratch, the session, and the two
     * warm passes — used by both the one-shot sweep ([[main]]) and the
-    * key-at-a-time [[BenchServer]] the interleaved paired ledger
-    * drives. Returns (session, sfDir, warm-failure count).
+    * key-at-a-time [[BenchServer]]. Returns (session, sfDir,
+    * warm-failure count).
     */
   private[graft] def warmedSession(): (SparkSession, String, Int) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Temp files (streaming checkpoints, foreachBatch sink, csv snapshot)
-    // on tmpfs: streaming state-store + commit-log fsyncs otherwise hit
-    // real disk once per micro-batch per partition.
-    val tmp = new java.io.File("/dev/shm/graft_tmp")
-    if (tmp.isDirectory || tmp.mkdirs()) System.setProperty("java.io.tmpdir", tmp.getPath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Shuffle/spill/stream-checkpoint scratch on tmpfs: local-mode
-      // shuffle files otherwise hit real disk on every Exchange.
-      .config("spark.local.dir", "/dev/shm/graft_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Session.useTmpfsScratch()
+    val spark = Session()
     // Warm the JVM/codegen paths: run the ENTIRE suite once at sf0.001
     // (tiny data) before timing. Each query's whole-stage-codegen source
     // is identical across sf dirs (paths live in the scan node, not the
@@ -35,37 +19,30 @@ object Bench {
     // data-path throughput — what a long-lived cluster session sees.
     val warmDir = "/root/testdata/sf0.001"
     var warmFails = 0
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.foreach { case (name, fn) =>
-        try { fn(spark, warmDir).count(); () }
-        catch { case t: Throwable =>
-          warmFails += 1
-          System.err.println(s"warmup($warmDir) FAILED $name: ${t.getClass.getSimpleName}")
-        }
+    def warm(dir: String): Unit = SparkEntry.queries.foreach { case (name, fn) =>
+      try { fn(spark, dir).count(); () }
+      catch { case t: Throwable =>
+        warmFails += 1
+        System.err.println(s"warmup($dir) FAILED $name: ${t.getClass.getSimpleName}")
       }
+    }
+    if (new java.io.File(warmDir).isDirectory) warm(warmDir)
     // Second warm pass at the bench tier itself: AQE re-plans some joins
     // differently at sf0.001 (broadcast) vs the bench sf (sort-merge), so
     // those queries' generated classes are still cold after the small-sf
-    // pass. One untimed pass at sfDir leaves the timed loop measuring
-    // steady-state throughput — the long-lived-session number that is
-    // comparable across rounds.
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try { fn(spark, sfDir).count(); () }
-      catch { case t: Throwable =>
-        warmFails += 1
-        System.err.println(s"warmup($sfDir) FAILED $name: ${t.getClass.getSimpleName}")
-      }
-    }
+    // pass.
+    warm(sfDir)
     (spark, sfDir, warmFails)
   }
 
-  /** Min-of-2 timing of one key (crash = loud failure, never a time). */
+  /** Min-of-2 timing of one key (crash = loud failure, never a time):
+    * the one timing path of Bench, BenchServer and the probe CLI. The
+    * minimum of two back-to-back reps bounds a one-off host/GC spike.
+    */
   private[graft] def timeKey(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
-    // Collect garbage OUTSIDE the timed region: with a 48g heap the
-    // warm passes leave enough floating garbage that a collection
-    // otherwise lands inside a random timed query (observed as 5x
-    // one-off spikes on otherwise-steady queries).
+      fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
+    // Collect garbage OUTSIDE the timed region, so a collection of the
+    // warm passes' floating garbage never lands inside a timed query.
     def rep(): (Double, Option[String]) = {
       System.gc()
       val t0 = System.nanoTime()
@@ -85,38 +62,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val (spark, sfDir, warmFails) = warmedSession()
-    // A crashed query is NOT a timing: record its error class instead of
-    // letting time-to-crash masquerade as throughput (r8 benched 48
-    // analysis-crashing queries at fail-fast cost and nothing in the
-    // artifact said so). `err` per query, failure count in every summary
-    // line, non-zero exit if any timed query failed.
-    // MIN-OF-2 per key (r9 verdict #1): the r9 driver artifact recorded
-    // stats_bootstrap_ci at 44.8 s where 3-rep isolation measures
-    // 2.05-2.86 s — a single-rep artifact cannot distinguish a plan
-    // regression from a one-off host/GC/contention spike, and ~50 s of
-    // the r9 headline pairing was exactly that class. The minimum of two
-    // back-to-back reps bounds any one-off spike: for one artifact
-    // number to be N× off the isolated truth, the SAME key must now
-    // spike twice in a row. (A between-keys getPersistentRDDs assert is
-    // NOT the fix here: the PQ/IVF model and graph-edge caches persist
-    // across keys BY DESIGN — one index build serving every probe of
-    // the session is the production shape, not residue.)
+    // A crashed query is NOT a timing: its error class is recorded per
+    // query, counted in every summary line, and makes the exit non-zero.
     val results: Seq[(String, Double, Option[String])] =
       SparkEntry.queries.toSeq.map { case (name, fn) =>
         val (t, e) = timeKey(spark, sfDir, fn)
         (name, t, e)
       }
     val failed = results.collect { case (name, _, Some(e)) => name -> e }
-    // Driver capture is a bounded TAIL of stdout (~2000 chars): a giant
-    // final line loses its HEAD and the driver's JSON parse fails — it
-    // has failed EVERY round since r10 (BENCH_r10..r15 all record
-    // `parsed: null`; the r15 verdict's item 1). So (a) per-query times
-    // go out as small individual lines first, (b) the full 334-key map
-    // still goes out as one (tail-beheaded but full-stdout-parseable)
-    // line plus full-precision bench_full.json, and (c) the VERY LAST
-    // stdout line is a compact total-only JSON (~150 bytes — intact in
-    // any tail window), which is the line the driver can actually parse.
-    // Measurement-bug fix only: the timed loop above is untouched.
+    // Callers often keep only a bounded tail of stdout, so per-query
+    // times go out as small lines first, the full map as one
+    // "total_full" line (plus full-precision bench_full.json), and the
+    // VERY LAST line is a compact total that fits any tail window.
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     results.foreach { case (k, v, err) =>
       val e = err.map(c => s""","err":"$c"""").getOrElse("")
@@ -134,10 +91,7 @@ object Bench {
       w.println(s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"warm_fails":$warmFails,"errors":$errsJson,"queries":$qsFull,"sf":"$sfDir"}""")
       w.close()
     } catch { case _: Throwable => () }
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","failed":${failed.size},"errors":$errsJson,"queries":$qs3,"value":${r3(total)}}""")
-    // Compact duplicate of the total as the final line (r16): ≤200 bytes
-    // so the driver's bounded tail always holds it intact. Same numbers
-    // as the full line above — nothing removed, nothing renamed.
+    println(s"""{"metric":"total_full","unit":"sec","sf":"$sfDir","failed":${failed.size},"errors":$errsJson,"queries":$qs3,"value":${r3(total)}}""")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":${failed.size},"n":${timed.size},"sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

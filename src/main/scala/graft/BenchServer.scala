@@ -1,27 +1,19 @@
 package graft
 
-/** Key-at-a-time bench server (r12, the r11 verdict's item 5): the
-  * Spark half of the INTERLEAVED paired ledger. Two rounds in a row
-  * needed a "host weather" paragraph because the Spark sweep and the
-  * DuckDB sweep ran in different minutes and the paired ratio absorbed
-  * ±30% of window drift — so tools/bench_paired.py now drives both
-  * engines per-key in lockstep: it asks this server to time key k
-  * (same warmed session + min-of-2 discipline as [[Bench]]), then times
-  * DuckDB's oracle SQL for k immediately after, within the same
-  * seconds of the same host window.
+/** Key-at-a-time bench server: the Spark half of the interleaved paired
+  * ledger. tools/bench_paired.py asks it to time key k (same warmed
+  * session and min-of-2 discipline as [[Bench]]), then times DuckDB's
+  * oracle SQL for k right after, so both engines see the same host
+  * window.
   *
   * Protocol (line-oriented over stdin/stdout, JSON out):
   *   → (after warmup) {"ready":true,"warm_fails":N,"keys":[...]}
   *   ← <key>\n        → {"key":"<key>","sec":T,"cpu_sec":C} or {...,"err":"Cls"}
   *   ← EXIT\n         → session stops, process exits 0.
   *
-  * cpu_sec (r14, the r13 verdict's item 9) is the JVM-wide process CPU
-  * consumed across the key's min-of-2 reps (both reps — wall `sec` is
-  * the min, but CPU attribution per rep is not separable from the MX
-  * bean; the artifact documents this). It makes the next host-weather
-  * episode diagnosable from the artifact itself: a wall spike with
-  * flat CPU = external contention; wall and CPU moving together = the
-  * plan really changed.
+  * cpu_sec is the JVM-wide process CPU across both of the key's reps
+  * (the MX bean cannot split it per rep): a wall spike with flat CPU is
+  * external contention, wall and CPU moving together is a plan change.
   */
 object BenchServer {
   private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean

@@ -42,16 +42,10 @@ object GenSf1 {
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/root/repo/artifacts/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     generate(spark, src, out)
     println(s"[gensf1] wrote documents/embeddings/lineitem/part/orders under $out")
+    spark.stop()
   }
 
   def generate(s: SparkSession, src: String, out: String): Unit = {

@@ -10,9 +10,8 @@ import graft.functions.{ExplodeDnf, FloatVecDot, MaskIntersect, SimHash60, VecTo
   * expressions at session build time —
   *
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)   // or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  *   builder.withExtensions(new GraftExtensions)   // or
+  *   builder.config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
   * This is the deployment path for a cluster (spark.sql.extensions works

@@ -229,7 +229,9 @@ object Tables {
     * across a sweep.
     */
   def scopedPin(s: SparkSession, key: String)(body: => DataFrame): DataFrame = {
-    val parts = s.conf.getOption("spark.graft.probe.parallelism").getOrElse("8")
+    val conf = "spark.graft.probe.parallelism"
+    val parts = s.conf.getOption(conf).getOrElse("8")
+    require(parts.toIntOption.exists(_ > 0), s"$conf must be a positive integer, got '$parts'")
     withConfs(s, Seq(
       "spark.sql.shuffle.partitions" -> parts,
       "spark.sql.adaptive.enabled" -> "false")) {

@@ -89,13 +89,8 @@ object Clusters extends OpGroup {
       (spark.createDataFrame(rdd, df.schema), n)
     }
     def pin(df: DataFrame): DataFrame = pinN(df)._1
-    def dbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] $msg t=${System.nanoTime() / 1000000}")
-    dbg("start")
     var (e, remaining) =
       pinN(edges.select(col("u"), col("v")).where(col("u") =!= col("v")))
-    dbg(s"edges pinned n=$remaining")
     // The loop's shuffles carry the shrinking edge/label tables — small
     // from round 1 on — so run them at few partitions (same state-volume
     // rationale as the streaming family): per-partition task overhead
@@ -159,7 +154,6 @@ object Clusters extends OpGroup {
       remaining = n2
       e = e2
       rounds += 1
-      dbg(s"round=$rounds edges=$remaining")
     }
     if (remaining > 0) {
       // Finish the ≤tailEdges remainder with a driver union-find (one
@@ -177,7 +171,6 @@ object Clusters extends OpGroup {
         import spark.implicits._
         maps += entries.toDF("node", "l")
       }
-      dbg(s"tail union-find edges=${tail.length} relabeled=${entries.size}")
       remaining = 0
       rounds += 1
     }
@@ -195,7 +188,6 @@ object Clusters extends OpGroup {
     // the result pin in the per-caller swap registry (r14, r13 verdict
     // item 5) so repeat invocations don't stack pinned blocks.
     val out = ResultPins.swap(spark, s"cc:$pinKey", labels)
-    dbg("labels composed")
     handles.foreach(_.unpersist(false))
     out
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
@@ -380,7 +372,7 @@ object Clusters extends OpGroup {
     * base signatures, and its probe IS the odd-incident verified
     * Jaccard edge set).
     */
-  private[graft] def ccAppendBase(s: org.apache.spark.sql.SparkSession, sf: String): String = {
+  private def ccAppendBase(s: org.apache.spark.sql.SparkSession, sf: String): String = {
     val dir = ccAppendDir(s, sf)
     if (Seq("assign", "simhash").exists(p =>
         !new java.io.File(s"$dir/$p", "_SUCCESS").exists())) {

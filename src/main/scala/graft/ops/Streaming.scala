@@ -92,14 +92,10 @@ object Streaming extends OpGroup {
     * creation-time decision there too — sized to the watermark-horizon
     * state, which for these queries is hundreds of windows/keys, not
     * millions of rows. Restored after the bounded run so batch ops keep
-    * the session default. GRAFT_STATE_PARTS overrides the per-op
-    * constant for builder-side sizing experiments (r12 re-measured 4 vs
-    * 8 across six keys: ~0.6 s net — the constants stand).
+    * the session default.
     */
   private def withStateParts[T](s: SparkSession, n: Int)(body: => T): T =
-    graft.Tables.withConfs(s,
-      Seq("spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("GRAFT_STATE_PARTS", n.toString)))(body)
+    graft.Tables.withConfs(s, Seq("spark.sql.shuffle.partitions" -> n.toString))(body)
 
   /** Tumbling 15-minute counts per event type, append mode: each window
     * emits once when the 1-hour watermark passes its end; the ~4 windows

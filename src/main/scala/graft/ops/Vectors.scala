@@ -601,31 +601,23 @@ object Vectors extends OpGroup {
       graft.ops.parity.r6(col("adc_d2")).as("adc_d2"))
     .orderBy("q_vec_id", "rk")
 
-  /** The full compressed-domain ranking dataflow, pre-scope — the seam
-    * the same-session scoped-vs-plain A/B measurement drives (r16).
-    */
-  private[graft] def pqAdcTopkPlain(s: SparkSession, sf: String): DataFrame = {
-    val (codes, tabA, tabB, tabC) = adcTables(s, sf)
-    adcRank(codes
-      .join(broadcast(tabC), Seq("ccid", "m", "cid"))
-      .join(broadcast(tabB), Seq("m", "cid"))
-      .join(broadcast(tabA), Seq("q_vec_id", "ccid", "m"))
-      .groupBy(col("q_vec_id"), col("vec_id"))
-      .agg(sum(col("a") + col("b") + col("c")).as("adc_d2")))
-  }
-
   private val pqAdcTopk = Op(
     "vec_pq_adc_topk",
     // Query-side residual tables vs EVERY cell (the spec's full
     // compressed-domain ranking; vec_pq_adc_probe is the nprobe-pruned
     // production variant of the same tables).
-    // Probe conf scope REVERTED (r16, the r15 verdict's item 4): the
-    // r15 keep rested on isolated one-window evidence that sweeps did
-    // not reproduce. Same-session INTERLEAVED A/B (graft.tools.AdcAb,
-    // 5 reps each): scoped min 1.450 / med 1.755 vs plain min 1.477 /
-    // med 1.764 — flat, far under the 10% keep bar; the plan-dump
-    // exchange-count drop is not a win by itself.
-    (s, sf) => pqAdcTopkPlain(s, sf).orderBy("q_vec_id", "rk"),
+    // No probe conf scope: an interleaved same-session A/B measured the
+    // scoped and plain plans flat (OPTIMIZATION_r16.md).
+    (s, sf) => {
+      val (codes, tabA, tabB, tabC) = adcTables(s, sf)
+      adcRank(codes
+        .join(broadcast(tabC), Seq("ccid", "m", "cid"))
+        .join(broadcast(tabB), Seq("m", "cid"))
+        .join(broadcast(tabA), Seq("q_vec_id", "ccid", "m"))
+        .groupBy(col("q_vec_id"), col("vec_id"))
+        .agg(sum(col("a") + col("b") + col("c")).as("adc_d2")))
+        .orderBy("q_vec_id", "rk")
+    },
     None,
   )
 

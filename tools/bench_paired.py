@@ -16,7 +16,7 @@ import sys, os, glob, json, time, subprocess
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ORACLE = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out/oracle_sql.json"
-THREADS = sys.argv[3] if len(sys.argv) > 3 else "32"
+THREADS = sys.argv[3] if len(sys.argv) > 3 else str(os.cpu_count())
 OUT = sys.argv[4] if len(sys.argv) > 4 else "artifacts/bench_paired.json"
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
