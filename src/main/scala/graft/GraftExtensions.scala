@@ -3,11 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RebalancePartitions, Repartition, RepartitionOperation, Sort}
+import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.functions.{ExplodeDnf, FloatVecDot, MaskIntersect, SimHash60, VecTopK}
 
 /** Session-extension entry point: registers the engine's custom Catalyst
-  * expressions at session build time —
+  * expressions and the [[GatherSmallSort]] optimizer rule at session
+  * build time —
   *
   * {{{
   *   builder.withExtensions(new GraftExtensions)   // or
@@ -64,6 +67,44 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ExplodeDnf(children.head)
       },
     ))
+    ext.injectOptimizerRule(_ => GatherSmallSort)
+  }
+}
+
+/** Plans a global sort over a small input on one partition. A global sort
+  * is planned as a range exchange, whose partitioner first runs a sampling
+  * job; on the tiny aggregates that most queries end with, that job and
+  * the exchange's map stage are most of the sort's cost. When the sort's
+  * input is estimated at or under `spark.sql.autoBroadcastJoinThreshold`
+  * (the same "small enough for one task" bound a broadcast uses, and `-1`
+  * turns this off too), the rule puts a shuffle-free coalesce to one
+  * partition under the sort: its single partition already satisfies the
+  * sort's ordered distribution, so no exchange and no sampling job run.
+  * Plans keep their sort as it is when they are streaming, when the input
+  * has no size estimate (a pinned result) or a large one (a join's is the
+  * product of its sides; any 100 TB input), or when the input repartitions
+  * itself, as a coalesce would collapse the parallelism it asked for.
+  */
+object GatherSmallSort extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val limit = conf.autoBroadcastJoinThreshold
+    if (limit < 0 || plan.isStreaming) plan
+    else plan.transformUp {
+      case s @ Sort(_, true, child, _)
+          if !gathered(child) && !child.exists(spreads) && child.stats.sizeInBytes <= limit =>
+        s.copy(child = Repartition(1, shuffle = false, child))
+    }
+  }
+
+  private def gathered(p: LogicalPlan): Boolean = p match {
+    case Repartition(1, false, _) => true
+    case _ => false
+  }
+
+  private def spreads(p: LogicalPlan): Boolean = p match {
+    case r: RepartitionOperation => r.shuffle
+    case _: RebalancePartitions => true
+    case _ => false
   }
 }
 

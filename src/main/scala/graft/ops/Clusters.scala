@@ -359,7 +359,7 @@ object Clusters extends OpGroup {
     */
   private[graft] def ccAppendDir(s: org.apache.spark.sql.SparkSession, sf: String): String =
     Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_cc_app_v2",
+      Tables.tmp("graft_cc_app_v2"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "documents"))
 
@@ -417,7 +417,7 @@ object Clusters extends OpGroup {
   private[graft] def ccAppendParts(s: org.apache.spark.sql.SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val dir = ccAppendBase(s, sf)
-    val base = s.read.parquet(s"$dir/assign")
+    val base = Tables.parquet(s, s"$dir/assign")
     // The ingest batch is a 10% daily slice (doc_id % 10 == 1 — every
     // batch doc is odd, hence already a member of the append-maintained
     // LSH index): the batch predicate is internal to the op, and the
@@ -442,7 +442,7 @@ object Clusters extends OpGroup {
     // the full pair op's O(Σ bucket²) (measured 5.9 s of the append's
     // 9 s at sf0.1, all spent producing pairs the filter then dropped).
     val shPairs = Dedup.simhashHammingPairsIncident(
-        Tables.spread(s, s.read.parquet(s"$dir/simhash")), batchSh)
+        Tables.spread(s, Tables.parquet(s, s"$dir/simhash")), batchSh)
       .select(col("a_doc_id").as("u"), col("b_doc_id").as("v"))
     // NOT pre-pinned (r15): incrementalMerge's label contraction is the
     // single consumer of the verified edges and pins the (far smaller)
@@ -512,7 +512,7 @@ object Clusters extends OpGroup {
         .write.parquet(s"$tmp/edges")
       connectedComponents(
           Tables.documents(s, sf).select(col("doc_id").as("node")),
-          s.read.parquet(s"$tmp/edges"), "cc_full@" + sf)
+          Tables.parquet(s, s"$tmp/edges"), "cc_full@" + sf)
         .write.parquet(s"$tmp/assign")
       Seq(sigs, masks, sh).foreach(_.unpersist(false))
     }
@@ -548,9 +548,9 @@ object Clusters extends OpGroup {
       Tables.documents(s, sf).filter(pmod(col("doc_id"), lit(10)) === 7)
         .select("doc_id").write.parquet(s"$tmp/docs")
     }
-    val retired = s.read.parquet(s"$dir/cc_tombstones/docs")
-    val assign = s.read.parquet(s"$dir/full/assign")
-    val edges = s.read.parquet(s"$dir/full/edges")
+    val retired = Tables.parquet(s, s"$dir/cc_tombstones/docs")
+    val assign = Tables.parquet(s, s"$dir/full/assign")
+    val edges = Tables.parquet(s, s"$dir/full/edges")
     // Touched labels: tiny (≤ |retired|), pinned for its three
     // consumers; broadcast by AQE in each.
     val touchedLabels = graft.ResultPins.swapCheckpoint(

@@ -820,7 +820,7 @@ object Dedup extends OpGroup {
     */
   private[graft] def lshIndexDir(s: SparkSession, sf: String): String =
     Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lsh_index",
+      Tables.tmp("graft_lsh_index"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "documents"))
 
@@ -929,9 +929,9 @@ object Dedup extends OpGroup {
       masks.write.mode("overwrite").parquet(s"$dir/masks")
       vocab.write.mode("overwrite").parquet(s"$dir/vocab")
     }
-    (s.read.parquet(s"$dir/bands"),
-      s.read.parquet(s"$dir/masks"),
-      s.read.parquet(s"$dir/vocab"))
+    (Tables.parquet(s, s"$dir/bands"),
+      Tables.parquet(s, s"$dir/masks"),
+      Tables.parquet(s, s"$dir/vocab"))
   }
 
   /** Probe an incremental batch against index relations (reloaded or
@@ -940,6 +940,12 @@ object Dedup extends OpGroup {
     * (band_idx, bkey) equi-join against the index — Σ bucket² work, the
     * same curve as dedup_minhash_lsh — and the exact popcount Jaccard
     * ≥ 0.9 verify runs on candidates only.
+    *
+    * With `dedupCandidates = false` the result is a MULTISET: a pair that
+    * collides in m bands is verified and returned m times. Only a caller
+    * that dedups downstream may pass it (the label contraction of the
+    * cc-append merge); a caller that counts or collects pairs must keep
+    * the default.
     */
   private[graft] def lshProbe(s: SparkSession, sf: String,
       index: (DataFrame, DataFrame, DataFrame),
@@ -1043,7 +1049,7 @@ object Dedup extends OpGroup {
       // artifacts from an older build can never half-serve the new
       // read path (the fingerprint in the dir NAME only invalidates on
       // data changes, not code-layout changes).
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lsh_index_app_v2",
+      Tables.tmp("graft_lsh_index_app_v2"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "documents"))
 
@@ -1138,7 +1144,7 @@ object Dedup extends OpGroup {
       batchTok.join(priorVocab.select("word"), Seq("word"), "left_anti"),
       baseBits)
       .write.mode("overwrite").parquet(s"$tmp/vocab")
-    val vocabAll = priorVocab.unionByName(s.read.parquet(s"$tmp/vocab"))
+    val vocabAll = priorVocab.unionByName(Tables.parquet(s, s"$tmp/vocab"))
     bandKeys(batchTok).write.mode("overwrite").partitionBy("band_idx").parquet(s"$tmp/bands")
     lshMasks(batchTok, vocabAll).write.mode("overwrite").parquet(s"$tmp/masks")
   }
@@ -1149,8 +1155,8 @@ object Dedup extends OpGroup {
   /** The word→bit dictionary through generation `g` (0 = base only). */
   private def lshVocabThrough(s: SparkSession, dir: String, g: Int): DataFrame =
     (0 to g).map {
-      case 0 => s.read.parquet(s"$dir/vocab")
-      case i => s.read.parquet(s"$dir/gen$i/vocab")
+      case 0 => Tables.parquet(s, s"$dir/vocab")
+      case i => Tables.parquet(s, s"$dir/gen$i/vocab")
     }.reduce(_.unionByName(_))
 
   /** One relation of the append-maintained index: generation 0 ∪ every
@@ -1160,8 +1166,8 @@ object Dedup extends OpGroup {
     */
   private[graft] def lshAppendedPart(s: SparkSession, dir: String, part: String): DataFrame =
     (0 to LshIngestGens).map {
-      case 0 => s.read.parquet(s"$dir/$part")
-      case g => s.read.parquet(s"$dir/gen$g/$part")
+      case 0 => Tables.parquet(s, s"$dir/$part")
+      case g => Tables.parquet(s, s"$dir/gen$g/$part")
     }.reduce(_.unionByName(_))
 
   /** Execute a probe-serving keyed op's dataflow under the small-data
@@ -1226,7 +1232,7 @@ object Dedup extends OpGroup {
       Tables.documents(s, sf).filter(pmod(col("doc_id"), lit(7)) === 0)
         .select("doc_id").write.mode("overwrite").parquet(s"$tmp/docs")
     }
-    s.read.parquet(s"$dir/tombstones/docs")
+    Tables.parquet(s, s"$dir/tombstones/docs")
   }
 
   /** The keyed op: the append key's rolling-dedup probe with the
@@ -1289,9 +1295,9 @@ object Dedup extends OpGroup {
           .write.mode("overwrite").parquet(s"$tmp/vocab")
       }
     }
-    (s.read.parquet(s"$dir/compact/bands"),
-      s.read.parquet(s"$dir/compact/masks"),
-      s.read.parquet(s"$dir/compact/vocab"))
+    (Tables.parquet(s, s"$dir/compact/bands"),
+      Tables.parquet(s, s"$dir/compact/masks"),
+      Tables.parquet(s, s"$dir/compact/vocab"))
   }
 
   /** VACUUM (r14) — the FIFTH lifecycle act: once a compaction is
@@ -1382,7 +1388,7 @@ object Dedup extends OpGroup {
   }
 
   private def lshAutoPart(s: SparkSession, dir: String, part: String): DataFrame =
-    lshAutoRootDirs(dir).map(r => s.read.parquet(s"$r/$part")).reduce(_.unionByName(_))
+    lshAutoRootDirs(dir).map(r => Tables.parquet(s, s"$r/$part")).reduce(_.unionByName(_))
 
   /** The append-commit-time policy check. Returns true iff a fold
     * committed. Exposed with explicit policy knobs so the spec can
@@ -1397,7 +1403,7 @@ object Dedup extends OpGroup {
       val srcRoots = lshAutoRootDirs(dir)
       Tables.commitStaged(dir, s"auto_compact_g$hw") { tmp =>
         Seq("bands", "masks", "vocab").foreach { part =>
-          val rel = srcRoots.map(r => s.read.parquet(s"$r/$part")).reduce(_.unionByName(_))
+          val rel = srcRoots.map(r => Tables.parquet(s, s"$r/$part")).reduce(_.unionByName(_))
           val bytes = srcRoots.map(r => Tables.dirBytes(new java.io.File(s"$r/$part"))).sum
           val rows = rel.count()
           val perFile = math.max(1L, targetBytes / math.max(1L, bytes / math.max(1L, rows)))

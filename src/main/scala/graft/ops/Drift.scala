@@ -299,11 +299,19 @@ object Drift extends OpGroup {
       // sort_array(struct(bmean, b)) IS row_number orderBy(bmean, b)
       // rank k — identical total order, identical picks (oracle
       // re-proven at sf0.01 + sf0.1).
+      // Ranks 3 and 98 of 100 (0-based 2 and 97), derived from B. A
+      // list of any other length fails the query instead of reading
+      // null CIs off the wrong grid.
+      val (lo, hi) = ((B * 0.025).toInt, B - 1 - (B * 0.025).toInt)
       val ci = rep.groupBy("event_type")
         .agg(sort_array(collect_list(struct(col("bmean"), col("b")))).as("ms"))
         .select(col("event_type"),
-          col("ms").getItem(2).getField("bmean").as("ci_lo"),
-          col("ms").getItem(97).getField("bmean").as("ci_hi"))
+          when(size(col("ms")) === B, col("ms"))
+            .otherwise(raise_error(lit(s"stats_bootstrap_ci: expected $B replica means per event type")))
+            .as("ms"))
+        .select(col("event_type"),
+          col("ms").getItem(lo).getField("bmean").as("ci_lo"),
+          col("ms").getItem(hi).getField("bmean").as("ci_hi"))
       val point = ev.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           r6(sum(dec(col("value"))).cast("double") / count(lit(1))).as("mean"))

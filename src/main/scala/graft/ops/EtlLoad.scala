@@ -501,7 +501,7 @@ object EtlLoad extends OpGroup {
   private val vacuumRetention = Op(
     "etl_vacuum_retention",
     (s, sf) => {
-      val base = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_vacuum/" +
+      val base = Tables.tmp("graft_vacuum/") +
         sf.replaceAll("[^a-zA-Z0-9.]", "_")
       // Pre-clean ALL prior runIds at this sf (invocations are
       // sequential within a harness), not just the one about to be
@@ -520,7 +520,7 @@ object EtlLoad extends OpGroup {
       val expired = parts.filter(f =>
         java.time.LocalDate.parse(f.getName.stripPrefix("event_date=")).isBefore(cutoff))
       expired.foreach(Tables.rmTree) // directory-level retention delete
-      val back = s.read.parquet(dir)
+      val back = Tables.parquet(s, dir)
       back.agg(
           countDistinct(col("event_date")).as("n_retained"),
           count(lit(1)).as("n_rows_retained"),

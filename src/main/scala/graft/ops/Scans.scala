@@ -60,7 +60,7 @@ object Scans extends OpGroup {
       import org.apache.spark.sql.types._
       // Fingerprinted cache dir: a regenerated region.parquet invalidates
       // the CSV snapshot instead of silently re-reading the stale one.
-      val dir = graft.Tables.cachedDir("/tmp/graft_csv",
+      val dir = Tables.cachedDir(Tables.tmp("graft_csv"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "region")) + "/region"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
@@ -90,7 +90,7 @@ object Scans extends OpGroup {
     */
   def partitionedEventsDir(s: org.apache.spark.sql.SparkSession, sf: String): String = {
     val dir = graft.Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_part_events",
+      Tables.tmp("graft_part_events"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       graft.Tables.fingerprint(sf, "events")) + "/events"
     if (!new java.io.File(dir, "_SUCCESS").exists())
@@ -103,7 +103,7 @@ object Scans extends OpGroup {
   private val partitionedMultifile = Op(
     "src_partitioned_multifile",
     (s, sf) => {
-      val week = s.read.parquet(partitionedEventsDir(s, sf))
+      val week = Tables.parquet(s, partitionedEventsDir(s, sf))
         .filter(col("event_date").between("2024-01-08", "2024-01-14"))
       week
         .groupBy(col("event_date"), col("event_type"))
@@ -129,13 +129,13 @@ object Scans extends OpGroup {
     "sink_partitioned_parquet",
     (s, sf) => {
       val dir = graft.Tables.cachedDir(
-        s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_part_sink",
+        Tables.tmp("graft_part_sink"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "orders")) + "/orders"
       if (!new java.io.File(dir, "_SUCCESS").exists())
         Tables.orders(s, sf).write.mode("overwrite")
           .partitionBy("o_orderpriority").parquet(dir)
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
         .groupBy(col("o_orderstatus"))
         .agg(
@@ -162,7 +162,7 @@ object Scans extends OpGroup {
     "src_orc_roundtrip",
     (s, sf) => {
       val dir = graft.Tables.cachedDir(
-        s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_orc",
+        Tables.tmp("graft_orc"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "customer")) + "/customer"
       if (!new java.io.File(dir, "_SUCCESS").exists())
@@ -193,15 +193,15 @@ object Scans extends OpGroup {
     (s, sf) => {
       val src = partitionedEventsDir(s, sf)
       val dir = graft.Tables.cachedDir(
-        s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_compact",
+        Tables.tmp("graft_compact"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "events")) + "/events"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
         val bytes = graft.Tables.dirBytes(new java.io.File(src))
         val target = math.max(1L, (bytes + (64L << 20) - 1) / (64L << 20)).toInt
-        s.read.parquet(src).repartition(target).write.mode("overwrite").parquet(dir)
+        Tables.parquet(s, src).repartition(target).write.mode("overwrite").parquet(dir)
       }
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           graft.ops.parity.r6(
@@ -221,7 +221,7 @@ object Scans extends OpGroup {
     * fact ⋈ filtered-dim queries from scanning every date directory.
     */
   private[graft] def dppJoinPlan(s: org.apache.spark.sql.SparkSession, sf: String) = {
-    val fact = s.read.parquet(partitionedEventsDir(s, sf))
+    val fact = Tables.parquet(s, partitionedEventsDir(s, sf))
     val dim = Tables.events(s, sf)
       .select(to_date(col("ts")).as("event_date")).distinct()
       .filter(weekofyear(col("event_date")) === 2)
@@ -251,7 +251,7 @@ object Scans extends OpGroup {
     */
   def backfillDir(s: org.apache.spark.sql.SparkSession, sf: String): String = {
     val dir = graft.Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_backfill",
+      Tables.tmp("graft_backfill"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       graft.Tables.fingerprint(sf, "events")) + "/events"
     if (!new java.io.File(dir, "_SUCCESS").exists())
@@ -273,7 +273,7 @@ object Scans extends OpGroup {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_date").parquet(dir)
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           graft.ops.parity.r6(
@@ -297,7 +297,7 @@ object Scans extends OpGroup {
     "src_schema_evolution",
     (s, sf) => {
       val dir = graft.Tables.cachedDir(
-        s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_evolve",
+        Tables.tmp("graft_evolve"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "orders")) + "/orders"
       if (!new java.io.File(s"$dir/gen=1", "_SUCCESS").exists()) {
@@ -341,7 +341,7 @@ object Scans extends OpGroup {
     "etl_zorder_layout",
     (s, sf) => {
       val dir = graft.Tables.cachedDir(
-        s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_zorder",
+        Tables.tmp("graft_zorder"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "events")) + "/events"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
@@ -367,7 +367,7 @@ object Scans extends OpGroup {
           .drop("zval", "day_nr")
           .write.mode("overwrite").parquet(dir)
       }
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
         .groupBy(col("event_type"), date_trunc("month", col("ts")).cast("date").as("month"))
         .agg(count(lit(1)).as("n"),
           graft.ops.parity.r6(
@@ -392,7 +392,7 @@ object Scans extends OpGroup {
   private val textLines = Op(
     "src_text_lines",
     (s, sf) => {
-      val dir = graft.Tables.cachedDir("/tmp/graft_text",
+      val dir = Tables.cachedDir(Tables.tmp("graft_text"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "documents")) + "/documents"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
@@ -426,7 +426,7 @@ object Scans extends OpGroup {
     "src_jsonl_roundtrip",
     (s, sf) => {
       import org.apache.spark.sql.types._
-      val dir = graft.Tables.cachedDir("/tmp/graft_jsonl",
+      val dir = Tables.cachedDir(Tables.tmp("graft_jsonl"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "documents")) + "/documents"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
@@ -466,7 +466,7 @@ object Scans extends OpGroup {
     "src_jsonl_corrupt_quarantine",
     (s, sf) => {
       import org.apache.spark.sql.types._
-      val dir = graft.Tables.cachedDir("/tmp/graft_jsonl_bad",
+      val dir = Tables.cachedDir(Tables.tmp("graft_jsonl_bad"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "documents")) + "/documents"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {
@@ -527,7 +527,7 @@ object Scans extends OpGroup {
         s"src_file_metadata expects the single-file fixture layout; " +
           s"$sf/documents.parquet is a directory — update the oracle to " +
           "derive per-part names before re-enabling")
-      s.read.parquet(s"$sf/documents.parquet")
+      Tables.parquet(s, s"$sf/documents.parquet")
         .select(expr("_metadata.file_name").as("file_name"))
         .groupBy("file_name")
         .agg(count(lit(1)).as("n_rows"))
@@ -555,7 +555,7 @@ object Scans extends OpGroup {
     "src_csv_corrupt_quarantine",
     (s, sf) => {
       import org.apache.spark.sql.types._
-      val dir = graft.Tables.cachedDir("/tmp/graft_csv_bad",
+      val dir = Tables.cachedDir(Tables.tmp("graft_csv_bad"),
         sf.replaceAll("[^a-zA-Z0-9.]", "_"),
         graft.Tables.fingerprint(sf, "documents")) + "/documents"
       if (!new java.io.File(dir, "_SUCCESS").exists()) {

@@ -687,7 +687,7 @@ object Vectors extends OpGroup {
     */
   private[graft] def pqIndexDir(s: SparkSession, sf: String): String =
     Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_pq_index",
+      Tables.tmp("graft_pq_index"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "embeddings"))
 
@@ -724,9 +724,9 @@ object Vectors extends OpGroup {
       // entire point of IVF at 100 TB.
       codes.write.mode("overwrite").partitionBy("ccid").parquet(s"$dir/codes")
     }
-    (s.read.parquet(s"$dir/coarse"),
-      s.read.parquet(s"$dir/codebook"),
-      s.read.parquet(s"$dir/codes"))
+    (Tables.parquet(s, s"$dir/coarse"),
+      Tables.parquet(s, s"$dir/codebook"),
+      Tables.parquet(s, s"$dir/codes"))
   }
 
   /** Reload-and-search: serve `vec_pq_adc_probe`'s exact query path
@@ -790,7 +790,7 @@ object Vectors extends OpGroup {
       // artifacts from an older build can never half-serve the new
       // read path (the fingerprint in the dir NAME only invalidates on
       // data changes, not code-layout changes).
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_pq_index_app_v2",
+      Tables.tmp("graft_pq_index_app_v2"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "embeddings"))
 
@@ -851,15 +851,15 @@ object Vectors extends OpGroup {
         // Encode the ingest batch with the PERSISTED model — the frozen
         // artifact, not the in-session memo (a cold session appends from
         // files alone; no training counter movement, spec-pinned).
-        val coarseR = s.read.parquet(s"$dir/coarse")
-        val cbR = s.read.parquet(s"$dir/codebook")
+        val coarseR = Tables.parquet(s, s"$dir/coarse")
+        val cbR = Tables.parquet(s, s"$dir/codebook")
         pqNearest(pqSubvectors(s, sf, coarseR), cbR)
           .filter(pmod(col("vec_id"), lit(4)) === (2 * g - 1))
           .select(col("vec_id"), col("ccid"), col("m"), col("cid"))
           .write.mode("overwrite").partitionBy("ccid").parquet(s"$tmp/codes")
       }
-    (s.read.parquet(s"$dir/coarse"),
-      s.read.parquet(s"$dir/codebook"),
+    (Tables.parquet(s, s"$dir/coarse"),
+      Tables.parquet(s, s"$dir/codebook"),
       pqAppendedCodes(s, dir))
   }
 
@@ -872,8 +872,8 @@ object Vectors extends OpGroup {
     */
   private[graft] def pqAppendedCodes(s: SparkSession, dir: String): DataFrame =
     (0 to PqIngestGens).map {
-      case 0 => s.read.parquet(s"$dir/codes")
-      case g => s.read.parquet(s"$dir/gen$g/codes")
+      case 0 => Tables.parquet(s, s"$dir/codes")
+      case g => Tables.parquet(s, s"$dir/gen$g/codes")
     }.reduce(_.unionByName(_))
 
   /** The keyed op: serve `vec_pq_adc_probe`'s nprobe=4 query path from
@@ -911,7 +911,7 @@ object Vectors extends OpGroup {
       Tables.embeddings(s, sf).filter(pmod(col("vec_id"), lit(7)) === 0)
         .select("vec_id").write.mode("overwrite").parquet(s"$tmp/ids")
     }
-    s.read.parquet(s"$dir/tombstones/ids")
+    Tables.parquet(s, s"$dir/tombstones/ids")
   }
 
   private val pqIndexDelete = Op(
@@ -955,9 +955,9 @@ object Vectors extends OpGroup {
           .write.mode("overwrite").partitionBy("ccid").parquet(s"$tmp/codes")
       }
     }
-    (s.read.parquet(s"$dir/coarse"),
-      s.read.parquet(s"$dir/codebook"),
-      s.read.parquet(s"$dir/compact/codes"))
+    (Tables.parquet(s, s"$dir/coarse"),
+      Tables.parquet(s, s"$dir/codebook"),
+      Tables.parquet(s, s"$dir/compact/codes"))
   }
 
   /** VACUUM (r14) — retire the generation CODE dirs once compaction is
@@ -1209,7 +1209,7 @@ object Vectors extends OpGroup {
     */
   private[graft] def semCcDir(s: SparkSession, sf: String): String =
     Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_semcc_app",
+      Tables.tmp("graft_semcc_app"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "embeddings"))
 
@@ -1231,7 +1231,7 @@ object Vectors extends OpGroup {
       // recompute at fixture scale.
       srpKeysOf(s, even).write.mode("overwrite").parquet(s"$dir/keys")
       val edges = cosineOfPairsOf(even,
-          srpCandidatesFromKeys(s.read.parquet(s"$dir/keys")))
+          srpCandidatesFromKeys(Tables.parquet(s, s"$dir/keys")))
         .filter(col("sim") >= 0.4)
         .select(col("a_vec_id").as("u"), col("b_vec_id").as("v"))
       Clusters.connectedComponents(even.select(col("vec_id").as("node")), edges,
@@ -1267,13 +1267,13 @@ object Vectors extends OpGroup {
   private[graft] def semClustersAppendParts(s: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val dir = semClustersBase(s, sf)
-    val base = s.read.parquet(s"$dir/assign") // (node, label), even-parity corpus
+    val base = Tables.parquet(s, s"$dir/assign") // (node, label), even-parity corpus
     val all = normed(s, sf)
     // Batch-only projections: the base keys come from the persisted
     // generation-0 relation; only the odd half pays the 16-projection
     // pass at append time (per-vector hashes, so persisted ∪ fresh =
     // the full-corpus key relation exactly).
-    val allKeys = s.read.parquet(s"$dir/keys").unionByName(
+    val allKeys = Tables.parquet(s, s"$dir/keys").unionByName(
       srpKeysOf(s, all.filter(pmod(col("vec_id"), lit(2)) === 1)))
     // NOT pre-pinned (r15): incrementalMerge's label contraction is the
     // single consumer of the verified edges and pins the (far smaller)
@@ -1331,7 +1331,7 @@ object Vectors extends OpGroup {
         .write.parquet(s"$tmp/edges")
       Clusters.connectedComponents(
           Tables.embeddings(s, sf).select(col("vec_id").as("node")),
-          s.read.parquet(s"$tmp/edges"), "semcc_full@" + sf)
+          Tables.parquet(s, s"$tmp/edges"), "semcc_full@" + sf)
         .write.parquet(s"$tmp/assign")
     }
     dir
@@ -1353,9 +1353,9 @@ object Vectors extends OpGroup {
       Tables.embeddings(s, sf).filter(pmod(col("vec_id"), lit(10)) === 7)
         .select("vec_id").write.parquet(s"$tmp/ids")
     }
-    val retired = s.read.parquet(s"$dir/sem_tombstones/ids")
-    val assign = s.read.parquet(s"$dir/full/assign")
-    val edges = s.read.parquet(s"$dir/full/edges")
+    val retired = Tables.parquet(s, s"$dir/sem_tombstones/ids")
+    val assign = Tables.parquet(s, s"$dir/full/assign")
+    val edges = Tables.parquet(s, s"$dir/full/edges")
     val touchedLabels = graft.ResultPins.swapCheckpoint(
       s"dedup_semantic_clusters_delete:touched@$sf",
       assign.join(retired.select(col("vec_id").as("node")), "node")

@@ -12,7 +12,7 @@ class LshIndexSpec extends SparkSpec {
   test("dedup_minhash_index_reload: reload ≡ recompute, and a warm index never rebuilds") {
     // Clean slate: no on-disk artifacts.
     Tables.rmTree(new java.io.File(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lsh_index"))
+      Tables.tmp("graft_lsh_index")))
 
     // Reference: the probe against FRESH index relations (no persistence
     // involved anywhere). md5 strings and longs round-trip parquet

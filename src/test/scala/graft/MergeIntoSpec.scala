@@ -52,7 +52,7 @@ class MergeIntoSpec extends SparkSpec {
     // option were silently ignored, the MERGE's cross-batch += path
     // would be untested (one batch would equal the plain full-outer).
     val base = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stream_merge/" +
+      Tables.tmp("graft_stream_merge/") +
         sf.replaceAll("[^a-zA-Z0-9.]", "_"))
     val commits = Option(base.listFiles()).getOrElse(Array.empty)
       .flatMap(run => Option(new java.io.File(run, "ckpt/commits").listFiles()).getOrElse(Array.empty))

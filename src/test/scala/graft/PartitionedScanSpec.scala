@@ -43,7 +43,7 @@ class PartitionedScanSpec extends SparkSpec {
   test("compaction rewrites the 30-file layout into the size-targeted file count") {
     SparkEntry.queries("etl_compact_small_files")(spark, sf).collect(): Unit
     val dir = Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_compact",
+      Tables.tmp("graft_compact"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "events")) + "/events"
     val srcBytes = Tables.dirBytes(new java.io.File(ops.Scans.partitionedEventsDir(spark, sf)))
@@ -103,7 +103,7 @@ class PartitionedScanSpec extends SparkSpec {
     // Materialize the layout (op is idempotent via its fingerprint cache).
     SparkEntry.queries("etl_zorder_layout")(spark, sf).collect()
     val dir = Tables.cachedDir(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_zorder",
+      Tables.tmp("graft_zorder"),
       sf.replaceAll("[^a-zA-Z0-9.]", "_"),
       Tables.fingerprint(sf, "events")) + "/events"
     val files = new java.io.File(dir).listFiles()

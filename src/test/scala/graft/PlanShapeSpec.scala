@@ -137,4 +137,72 @@ class PlanShapeSpec extends SparkSpec {
     assert(joinsOnBkt,
       s"expected the price window input to be pruned by a bucket join:\n$plan")
   }
+
+  /** Run `f` in a session built with GraftExtensions on the shared
+    * SparkContext, the deployment path every main uses.
+    */
+  private def withGraftSession(f: org.apache.spark.sql.SparkSession => Unit): Unit = {
+    val orig = spark // force-create the shared session first
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val ext = org.apache.spark.sql.SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new GraftExtensions)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      ext.conf.set("spark.sql.shuffle.partitions", "4")
+      ext.conf.set("spark.sql.session.timeZone", "UTC")
+      f(ext)
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(orig)
+      org.apache.spark.sql.SparkSession.setDefaultSession(orig)
+    }
+  }
+
+  private def rangeSorts(plan: String): Boolean = plan.contains("rangepartitioning")
+
+  test("a small final orderBy is gathered onto one partition, with no range exchange") {
+    withGraftSession { ext =>
+      for (key <- Seq("agg_group_summary", "math_try_safe")) {
+        val df = SparkEntry.queries(key)(ext, sf)
+        val plan = finalPlan(df)
+        assert(!rangeSorts(plan), s"$key still range-partitions its sort:\n$plan")
+        assert(plan.contains("Coalesce 1"), s"$key sorts without the gather:\n$plan")
+        assert(df.collect().toSeq == SparkEntry.queries(key)(spark, sf).collect().toSeq,
+          s"$key: the gathered sort changed the result")
+      }
+      // -1 turns the gather off, as it does broadcast joins.
+      ext.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val plan = finalPlan(SparkEntry.queries("agg_group_summary")(ext, sf))
+        assert(rangeSorts(plan), s"threshold -1 still gathered the sort:\n$plan")
+      } finally ext.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("a large or self-repartitioned sort input keeps its range exchange") {
+    withGraftSession { ext =>
+      import org.apache.spark.sql.functions.col
+      // 2^40 rows: the 100 TB regime. Planned only, never run.
+      val huge = ext.range(0, 1L << 40).orderBy(col("id").desc).queryExecution.executedPlan
+      assert(rangeSorts(huge.toString), s"a 2^40-row sort lost its range exchange:\n$huge")
+      // A plan that sets its own parallelism keeps it.
+      val spread = finalPlan(ext.range(100).toDF().repartition(8).orderBy(col("id").desc))
+      assert(rangeSorts(spread), s"a repartitioned input was gathered:\n$spread")
+    }
+  }
+
+  test("the gather leaves streaming plans alone") {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition, Sort}
+    val x = AttributeReference("x", org.apache.spark.sql.types.LongType)()
+    def sortOver(streaming: Boolean) =
+      Sort(Seq(SortOrder(x, Ascending)), global = true,
+        LocalRelation(Seq(x), Nil, isStreaming = streaming))
+    def gathered(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.exists { case Repartition(1, false, _) => true; case _ => false }
+    assert(gathered(GatherSmallSort(sortOver(streaming = false))))
+    assert(!gathered(GatherSmallSort(sortOver(streaming = true))))
+  }
 }

@@ -11,7 +11,7 @@ class PqIndexSpec extends SparkSpec {
   test("vec_pq_index_reload serves the probe path identically and a cold reload never retrains") {
     // Start from a clean slate: no on-disk artifacts, no memoized model.
     Tables.rmTree(new java.io.File(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_pq_index"))
+      Tables.tmp("graft_pq_index")))
     ops.Vectors.pqModelReset()
 
     // In-session path trains (memoized); the first reload call builds
@@ -113,7 +113,7 @@ class PqIndexSpec extends SparkSpec {
 
     // Clean append lineage: generation 0 (model + even codes), snapshot.
     Tables.rmTree(new java.io.File(
-      s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_pq_index_app_v2"))
+      Tables.tmp("graft_pq_index_app_v2")))
     val dir = ops.Vectors.pqAppendBase(spark, sf)
     def files(root: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =

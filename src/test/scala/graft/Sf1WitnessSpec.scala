@@ -129,7 +129,7 @@ class Sf1WitnessSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val fn = SparkEntry.queries("dedup_minhash_index_reload")
     def buildAndProbe(dir: String): (Double, Double) = {
       Tables.rmTree(new java.io.File(
-        s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_lsh_index"))
+        Tables.tmp("graft_lsh_index")))
       val t0 = System.nanoTime(); fn(spark, dir).count()
       val build = (System.nanoTime() - t0) / 1e9
       val probe = (1 to 2).map { _ =>

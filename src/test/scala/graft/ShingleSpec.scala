@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class ShingleSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_shingle_fixture"
+    val d = Tables.tmp("graft_shingle_fixture")
     Tables.rmTree(new java.io.File(d))
     val words = (1 to 60).map(i => s"w$i")
     val base = words.mkString(" ")
