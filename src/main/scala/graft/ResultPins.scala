@@ -1,83 +1,105 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
-/** Op-scoped registry of RESULT pins (r14, the r13 verdict's item 5).
+/** The one owner of session-held relations: which materialized relations
+  * stay in the block manager, and when they are freed. Three kinds:
   *
-  * The graph/phash ops pin their final result RDD (persist + count) to
-  * truncate the logical plan before the output sort — deliberate, and
-  * the loop INTERMEDIATES were already persist/unpersist-managed — but
-  * through r13 each invocation's result pin stayed in the block manager
-  * forever, so a long-lived session (a min-of-2 bench sweep, a
-  * notebook) accumulated one small pinned RDD per invocation. The same
-  * class of leak was fixed for the LSH probe's checkpoint in r12
-  * (commit a3d25dd); this finishes the job for the result pins.
+  *  - RESULT pins ([[swap]], [[swapCheckpoint]]), one per op key. Ops
+  *    pin their final result to truncate the logical plan before the
+  *    output sort. Registering a pin under its key SWAPS OUT the previous
+  *    invocation's pin (non-blocking unpersist), so the block manager
+  *    holds at most ONE result pin per (op, corpus): a long-lived session
+  *    (a bench sweep, a notebook) stays flat instead of gaining one
+  *    pinned RDD per invocation (ResultPinsSpec). [[release]] frees one
+  *    key, [[releaseAll]] every pin.
+  *  - Per-corpus MEMOS ([[memo]]): a trained model or a shared graph,
+  *    built once per (session, sfDir, kind, input fingerprint) and kept
+  *    until [[forget]] drops its kind. [[releaseAll]] leaves them alone:
+  *    a long session re-serves them across pin teardowns.
+  *  - SCOPED intermediates ([[scoped]]): pinned for one op's body and
+  *    freed when it exits, also on exception.
   *
-  * Registering a pin under its op key SWAPS OUT the previous
-  * invocation's pin (non-blocking unpersist), so the block manager
-  * holds at most ONE result pin per (op, corpus) at any time — flat,
-  * not monotonic. A [[swap]]-pinned DataFrame stays CORRECT if a
-  * caller still holds it after being swapped out (the RDD lineage
-  * recomputes on demand); only its cached blocks are released. A
-  * [[swapCheckpoint]]-pinned DataFrame does NOT — localCheckpoint
-  * TRUNCATES lineage, so releasing the superseded checkpoint's blocks
-  * leaves the old DataFrame unrecomputable (missing-block errors on
-  * next action). Callers must treat a swapCheckpoint result as valid
-  * only until the same key is swapped again — i.e. don't consume a
-  * prior invocation's pinned relation (or anything derived lazily from
-  * it, like the append ops' witness seams) after re-invoking the op.
-  * [[releaseAll]] frees everything — spec/bench teardown hygiene,
-  * asserted by ResultPinsSpec via `sparkContext.getPersistentRDDs`.
+  * A [[swap]]-pinned DataFrame stays CORRECT if a caller still holds it
+  * after being swapped out (the RDD lineage recomputes on demand); only
+  * its cached blocks are released. A [[swapCheckpoint]]-pinned DataFrame
+  * does NOT: localCheckpoint TRUNCATES lineage, so releasing the
+  * superseded checkpoint's blocks leaves the old DataFrame
+  * unrecomputable (missing-block errors on next action). Callers must
+  * treat a swapCheckpoint result as valid only until the same key is
+  * swapped again, i.e. not consume a prior invocation's pinned relation
+  * (or anything derived lazily from it, like the append ops' witness
+  * seams) after re-invoking the op. The same holds for a memo after
+  * [[forget]].
   */
 object ResultPins {
-  private val pins = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
+  /** Every registered result pin: key -> the RDDs whose blocks it holds. */
+  private val pins = new java.util.concurrent.ConcurrentHashMap[String, Seq[RDD[_]]]()
 
-  /** Materialize and pin `df`'s rows, replacing — and freeing — the
-    * previous pin registered under `key`. Returns the rewrapped
-    * DataFrame (plan truncated at the pinned RDD, the clusterCc
-    * discipline).
+  private def register(key: String, held: Seq[RDD[_]]): Unit = {
+    val old = pins.put(key, held)
+    if (old != null) old.filterNot(held.contains).foreach(_.unpersist(false))
+  }
+
+  /** Persist `df`'s rows and count them: the rewrapped DataFrame's plan
+    * starts at the persisted RDD, so later plans over it neither
+    * recompute nor re-analyze the lineage.
+    */
+  private def materialize(s: SparkSession, df: DataFrame): (DataFrame, RDD[Row], Long) = {
+    val rdd = df.rdd
+    rdd.persist()
+    val n = rdd.count()
+    (s.createDataFrame(rdd, df.schema), rdd, n)
+  }
+
+  /** Materialize and pin `df`'s rows, replacing (and freeing) the
+    * previous pin registered under `key`. Returns the rewrapped DataFrame,
+    * plan truncated at the pinned RDD. Every op that pins its result
+    * registers it here rather than persisting on its own: an unregistered
+    * pin stays in the block manager for the rest of the session, one more
+    * per invocation.
     */
   def swap(s: SparkSession, key: String, df: DataFrame): DataFrame = {
     capturePlan(key, df)
-    val rdd = df.rdd
-    rdd.persist(); rdd.count(): Unit
-    val old = pins.put(key, rdd)
-    if (old != null && old.id != rdd.id) old.unpersist(false)
-    s.createDataFrame(rdd, df.schema)
+    val (out, rdd, _) = materialize(s, df)
+    register(key, Seq(rdd))
+    out
   }
 
-  private val ckPins = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[swap]] for LARGE relations: pin via `localCheckpoint` (eager),
-    * which caches InternalRow blocks — no per-row Row decode on
+    * which caches InternalRow blocks: no per-row Row decode on
     * materialization and no re-serialization when downstream plans scan
-    * the pin (the r14 cc-append profile: the same 1M-row pipeline cost
-    * 23 s through `df.rdd` + Row conversion vs ~6 s checkpointed).
-    * Swap semantics differ from [[swap]] in one load-bearing way (r15
-    * advice): the superseded checkpoint's blocks are released AND its
-    * lineage is already truncated, so the swapped-out DataFrame is
-    * INVALIDATED, not merely evicted — see the class doc.
+    * the pin (the same 1M-row cc-append pipeline cost 23 s through
+    * `df.rdd` + Row conversion vs ~6 s checkpointed). The superseded
+    * checkpoint's blocks are released AND its lineage is already
+    * truncated, so the swapped-out DataFrame is INVALIDATED, not merely
+    * evicted; see the object doc.
     */
   def swapCheckpoint(key: String, df: DataFrame): DataFrame = {
     capturePlan(key, df)
     val ck = df.localCheckpoint()
-    val old = ckPins.put(key, ck)
-    if (old != null) releaseCheckpoint(old)
+    register(key, checkpointRdds(ck))
     ck
   }
 
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
+  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  /** OPT-IN plan observability (r15): pinning materializes a result and
+  /** Free the block-manager storage behind a localCheckpointed DataFrame
+    * NOW rather than when the ContextCleaner gets to the orphaned RDD.
+    * No-op on plans that were never checkpointed.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    checkpointRdds(df).foreach(_.unpersist(false))
+
+  /** OPT-IN plan observability: pinning materializes a result and
     * rewraps it over the pinned RDD, which TRUNCATES the visible plan of
-    * the returned DataFrame — `explain` on a pinned op shows only the
+    * the returned DataFrame: `explain` on a pinned op shows only the
     * RDD scan + output sort. When the `graft.plan.capture` system
-    * property is set (plan-audit tooling only — never the bench; the
+    * property is set (plan-audit tooling only, never the bench; the
     * formatted-explain render costs milliseconds per invocation), the
     * pre-pin physical plan is recorded per pin key so audits can read
     * the dataflow that actually executed inside the scope.
@@ -92,28 +114,90 @@ object ResultPins {
   /** The last captured pre-pin plan for `key`, if capture is enabled. */
   def lastPlan(key: String): Option[String] = Option(planLog.get(key))
 
-  /** Release only the pin registered under `key` (r16, the r15 advice:
-    * specs that must clear ONE op's by-design pin before a leak
-    * assertion release it by key, keeping every other pin — and any
-    * genuine leak routed through ResultPins — on the witness surface).
+  /** Release only the pin registered under `key`: specs that must clear
+    * ONE op's by-design pin before a leak assertion keep every other pin,
+    * and any genuine leak routed through ResultPins, on the witness
+    * surface.
     */
   def release(key: String): Unit = {
-    val rdd = pins.remove(key)
-    if (rdd != null) rdd.unpersist(false)
-    val df = ckPins.remove(key)
-    if (df != null) releaseCheckpoint(df)
+    val held = pins.remove(key)
+    if (held != null) held.foreach(_.unpersist(false))
   }
 
-  /** Release every registered result pin (long-session / spec hygiene). */
+  /** Release every registered result pin (long-session / spec hygiene).
+    * Memos are not pins and survive: a bench cycle that starts with
+    * releaseAll must not retrain the PQ model.
+    */
   def releaseAll(): Unit = {
     import scala.jdk.CollectionConverters._
-    pins.keySet().asScala.toList.foreach { k =>
-      val rdd = pins.remove(k)
-      if (rdd != null) rdd.unpersist(false)
+    pins.keySet().asScala.toList.foreach(release)
+  }
+
+  /** Per-corpus memo store, keyed (session, sfDir, kind, inputs). */
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String), AnyRef]()
+
+  /** The relation(s) `build` makes for `sf`, built once per session and
+    * input version: `inputs` is the caller's fingerprint of what the
+    * build reads (the [[Tables.fingerprint]] of its tables, plus any
+    * build parameter), so a regenerated fixture builds afresh instead of
+    * serving the old corpus. Builds are order-free-deterministic, so the
+    * memo is semantically invisible. get / putIfAbsent rather than
+    * computeIfAbsent: a build runs multi-job Spark work, which must not
+    * execute inside the map's bin lock. A duplicate build that loses the
+    * race releases every checkpointed Dataset in what it built and adopts
+    * the winner's.
+    */
+  def memo[T <: AnyRef](s: SparkSession, sf: String, kind: String, inputs: String)
+      (build: => T): T = {
+    val k = (s, sf, kind, inputs)
+    val hit = memos.get(k)
+    if (hit != null) hit.asInstanceOf[T]
+    else {
+      val built = build
+      val raced = memos.putIfAbsent(k, built)
+      if (raced == null) built
+      else { releaseMemo(built); raced.asInstanceOf[T] }
     }
-    ckPins.keySet().asScala.toList.foreach { k =>
-      val df = ckPins.remove(k)
-      if (df != null) releaseCheckpoint(df)
+  }
+
+  private def releaseMemo(v: AnyRef): Unit = {
+    def rel(x: Any): Unit = x match {
+      case d: Dataset[_] => releaseCheckpoint(d.toDF())
+      case _             => ()
     }
+    v match {
+      case p: Product => p.productIterator.foreach(rel)
+      case other      => rel(other)
+    }
+  }
+
+  /** Drop every memo of the given kinds, in every session and corpus,
+    * AND release its checkpointed storage: retrain specs and long-lived
+    * sessions scoring many sfDirs both need the executor storage back,
+    * not just the entries gone.
+    */
+  def forget(kinds: String*): Unit = {
+    import scala.jdk.CollectionConverters._
+    memos.keySet().asScala.toList.filter(k => kinds.contains(k._3)).foreach { k =>
+      val v = memos.remove(k)
+      if (v != null) releaseMemo(v)
+    }
+  }
+
+  /** Run `body` with a pin for loop and multi-use intermediates: the pin
+    * materializes a frame as a persisted RDD and returns the rewrapped
+    * frame (plan truncated at the pin, which `persist` alone does not do)
+    * and its row count. Every pin taken in `body` is freed when it exits,
+    * also on exception. A result that must outlive the scope is pinned
+    * with [[swap]] inside the body.
+    */
+  def scoped[T](s: SparkSession)(body: (DataFrame => (DataFrame, Long)) => T): T = {
+    var held = List.empty[RDD[Row]]
+    try body { df =>
+      val (out, rdd, n) = materialize(s, df)
+      held ::= rdd
+      (out, n)
+    } finally held.foreach(_.unpersist(false))
   }
 }

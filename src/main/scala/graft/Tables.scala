@@ -210,8 +210,8 @@ object Tables {
       .filter(f => f.getName.startsWith(s".$name.staging-") &&
         f.lastModified() < System.currentTimeMillis() - 3600_000L)
       .foreach(rmTree)
-    val nonce = java.lang.management.ManagementFactory.getRuntimeMXBean.getPid +
-      "-" + java.util.UUID.randomUUID().toString.take(8)
+    val nonce = s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getPid}-" +
+      java.util.UUID.randomUUID().toString.take(8)
     val tmp = new java.io.File(dir, s".$name.staging-$nonce")
     stage(tmp.getAbsolutePath)
     try

@@ -29,9 +29,10 @@ object Clusters extends OpGroup {
     *
     * Loop mechanics that matter at scale: the (possibly expensive) pair
     * pipeline behind `edges` is persisted ONCE and every intermediate is
-    * explicitly persist/unpersist-managed — a prior localCheckpoint
-    * formulation leaked its block-manager blocks past the op and taxed
-    * every query that ran after it in the same session. One driver action
+    * a [[graft.ResultPins.scoped]] pin, freed when the op returns — a
+    * prior localCheckpoint formulation leaked its block-manager blocks
+    * past the op and taxed every query that ran after it in the same
+    * session. One driver action
     * per round (the relabeled-edge count, which doubles as the
     * convergence test); the full node→label table is only composed ONCE
     * at the end, by folding the per-round contraction maps (each at most
@@ -71,23 +72,16 @@ object Clusters extends OpGroup {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       pinKey: String = "shared"): DataFrame = {
     val spark = nodes.sparkSession
-    var handles = List.empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    // Pin a loop intermediate: materialize to a persisted RDD[Row] and
-    // rewrap. This TRUNCATES the logical plan — `persist` alone does
-    // not, and each round's plan embeds ~5 copies of the previous
-    // round's (e + two m references, m itself holding two e's), so
-    // un-truncated analysis cost grows 5^rounds (the first r5 cut spent
-    // minutes in Catalyst before round 4). The RDD handle also lets the
-    // op free every intermediate's blocks before returning — a prior
-    // localCheckpoint formulation leaked its blocks past the op and
-    // taxed every query that ran after it in the same session.
-    def pinN(df: DataFrame): (DataFrame, Long) = {
-      val rdd = df.rdd
-      rdd.persist()
-      val n = rdd.count() // materializes AND doubles as the loop's count
-      handles ::= rdd
-      (spark.createDataFrame(rdd, df.schema), n)
-    }
+    // Loop intermediates are scope pins: the pin TRUNCATES the logical
+    // plan — `persist` alone does not, and each round's plan embeds ~5
+    // copies of the previous round's (e + two m references, m itself
+    // holding two e's), so un-truncated analysis cost grows 5^rounds (the
+    // first r5 cut spent minutes in Catalyst before round 4). The scope
+    // frees every intermediate's blocks when the op returns — a prior
+    // localCheckpoint formulation leaked its blocks past the op and taxed
+    // every query that ran after it in the same session. The pin's row
+    // count doubles as the loop's convergence count.
+    ResultPins.scoped(spark) { pinN =>
     def pin(df: DataFrame): DataFrame = pinN(df)._1
     var (e, remaining) =
       pinN(edges.select(col("u"), col("v")).where(col("u") =!= col("v")))
@@ -184,13 +178,10 @@ object Clusters extends OpGroup {
         .select(col("node"), coalesce(col("l"), col("label")).as("label"))
     }
     // Materialize the small final table (|nodes| rows of two longs) off
-    // the loop's lineage, then free every intermediate — and register
-    // the result pin in the per-caller swap registry (r14, r13 verdict
-    // item 5) so repeat invocations don't stack pinned blocks.
-    val out = ResultPins.swap(spark, s"cc:$pinKey", labels)
-    handles.foreach(_.unpersist(false))
-    out
+    // the loop's lineage before the scope frees every intermediate.
+    ResultPins.swap(spark, s"cc:$pinKey", labels)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** INCREMENTAL COMPONENT MERGE (r14; restructured r15, the r14
@@ -617,33 +608,19 @@ object Clusters extends OpGroup {
     * order-key self-join (per-order fanout = basket size) + one hash
     * agg — callers pin the result before multi-consuming it.
     */
-  /** Memoized, checkpointed co-purchase edge list per (session, sfDir)
-    * — the "build the graph ONCE" production shape: all seven kernels
+  /** Memoized, checkpointed co-purchase edge list per corpus (memo kind
+    * "copurchase_edges", keyed by the lineitem and part fingerprints) —
+    * the "build the graph ONCE" production shape: all seven kernels
     * read the same ~57k-row relation, so it is materialized once
     * (localCheckpoint truncates the wedge-join build lineage) instead
     * of re-running the corpus-scale build per kernel (measured ~0.8 s
     * × 6 redundant builds per bench session at sf0.1). The build is
     * order-free-deterministic (distinct + equi-join + group), so
-    * memoization is semantically invisible — the [[Vectors.pqModel]]
-    * discipline, including the lose-the-race storage release and
-    * [[graphEdgesReset]] for multi-sfDir sessions.
+    * memoization is semantically invisible.
     */
-  private val edgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  private[graft] def graphEdgesReset(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val vs = edgeCache.values().asScala.toList
-    edgeCache.clear()
-    vs.foreach(Vectors.releaseCheckpoint)
-  }
-
-  private[graft] def copurchaseEdges(s: org.apache.spark.sql.SparkSession, sf: String): DataFrame = {
-    val k = (s, sf)
-    val hit = edgeCache.get(k)
-    if (hit != null) hit
-    else {
-      val built = Tables.withConfs(s, Seq(
+  private[graft] def copurchaseEdges(s: org.apache.spark.sql.SparkSession, sf: String): DataFrame =
+    ResultPins.memo(s, sf, "copurchase_edges", copurchaseInputs(sf)) {
+      Tables.withConfs(s, Seq(
         "spark.sql.shuffle.partitions" -> "8")) {
         val items = Tables.lineitem(s, sf)
           .join(Tables.part(s, sf).filter(col("p_size") >= 40)
@@ -657,18 +634,14 @@ object Clusters extends OpGroup {
           .select("u", "v")
           .localCheckpoint()
       }
-      val raced = edgeCache.putIfAbsent(k, built)
-      if (raced == null) built
-      else { Vectors.releaseCheckpoint(built); raced }
     }
-  }
 
-  private val symDegCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
+  private def copurchaseInputs(sf: String): String =
+    s"${Tables.fingerprint(sf, "lineitem")}|${Tables.fingerprint(sf, "part")}"
 
   /** Degree-annotated symmetric co-purchase edges — (symD: u, v, deg_u,
-    * deg_v; deg: node, deg) — localCheckpoint-cached per corpus like
-    * [[copurchaseEdges]] (r15, the r14 verdict's item 6): the wedge
+    * deg_v; deg: node, deg) — localCheckpoint-memoized per corpus like
+    * [[copurchaseEdges]] (memo kind "copurchase_symdeg"): the wedge
     * family (adamic_adar, neighbor_jaccard, 2hop_reach) shares this
     * prefix but each key re-derived the degree groupBy + joins per
     * invocation. Carrying BOTH endpoint degrees on the edge row lets
@@ -677,12 +650,9 @@ object Clusters extends OpGroup {
     * grouping by it adds no granularity).
     */
   private[graft] def copurchaseSymDeg(s: org.apache.spark.sql.SparkSession,
-      sf: String): (DataFrame, DataFrame) = {
-    val k = (s, sf)
-    val hit = symDegCache.get(k)
-    if (hit != null) hit
-    else {
-      val built = Tables.withConfs(s, Seq(
+      sf: String): (DataFrame, DataFrame) =
+    ResultPins.memo(s, sf, "copurchase_symdeg", copurchaseInputs(sf)) {
+      Tables.withConfs(s, Seq(
         "spark.sql.shuffle.partitions" -> "8")) {
         val edges = copurchaseEdges(s, sf)
         val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
@@ -694,14 +664,7 @@ object Clusters extends OpGroup {
           .select("u", "v", "deg_u", "deg_v").localCheckpoint()
         (symD, deg)
       }
-      val raced = symDegCache.putIfAbsent(k, built)
-      if (raced == null) built
-      else {
-        Vectors.releaseCheckpoint(built._1); Vectors.releaseCheckpoint(built._2)
-        raced
-      }
     }
-  }
 
   private val copurchaseTriangles = Op(
     "graph_copurchase_triangles",
@@ -733,9 +696,6 @@ object Clusters extends OpGroup {
       // then free the edge blocks (clusterCc's hygiene: nothing but the
       // result outlives the op in the block manager). The output sort
       // runs on the pinned relation.
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_copurchase_triangles@" + sf, out).orderBy("p_partkey")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), deg AS (SELECT node, COUNT(*) AS degree FROM (SELECT u AS node FROM e UNION ALL SELECT v FROM e) s GROUP BY node), tri AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z FROM e e1 JOIN e e2 ON e2.u = e1.v JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v), tpn AS (SELECT node, COUNT(*) AS n_triangles FROM (SELECT x AS node FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri) s GROUP BY node) SELECT d.node AS p_partkey, d.degree, COALESCE(t.n_triangles, 0) AS n_triangles, ROUND(1e-9 + COALESCE(t.n_triangles, 0) * 2.0 / NULLIF(d.degree * (d.degree - 1), 0), 6) AS clustering FROM deg d LEFT JOIN tpn t ON t.node = d.node ORDER BY p_partkey"""),
@@ -768,15 +728,8 @@ object Clusters extends OpGroup {
     */
   private val copurchasePagerank = Op(
     "graph_copurchase_pagerank",
-    (s, sf) => {
+    (s, sf) => ResultPins.scoped(s) { pin =>
       import graft.ops.parity.{dec, r6}
-      var handles = List.empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-      def pin(df: DataFrame): DataFrame = {
-        val rdd = df.rdd
-        rdd.persist(); rdd.count(): Unit
-        handles ::= rdd
-        s.createDataFrame(rdd, df.schema)
-      }
       // AQE off for this op: the static planner keeps the 5 iterations'
       // identical sym-side exchanges canonically equal, so the edge
       // shuffle runs ONCE and is ReusedExchange'd by iterations 2-5 —
@@ -791,7 +744,7 @@ object Clusters extends OpGroup {
       // One pinned static relation carries (node, deg, nn); deg is
       // referenced twice inside this single action (nN + the cross
       // join), a cheap in-job recompute of one 8-partition agg.
-      val meta = pin(deg.crossJoin(nN))
+      val (meta, _) = pin(deg.crossJoin(nN))
       var pr = meta.select(col("node"), col("deg"), col("nn"),
         r6(lit(1000000.0) / col("nn")).as("pr"))
       for (_ <- 1 to 5) {
@@ -815,14 +768,11 @@ object Clusters extends OpGroup {
             r6(lit(150000.0) / col("nn") +
               lit(0.85) * col("sc").cast("double")).as("pr"))
       }
-      // Result pin via the per-op swap registry (r14, r13 verdict item
-      // 5); the meta pin — the only entry left in `handles` — is freed
-      // here as before.
-      val out = ResultPins.swap(s, "graph_copurchase_pagerank@" + sf,
+      // The result pin materializes all five iterations before the
+      // scope frees the meta pin.
+      ResultPins.swap(s, "graph_copurchase_pagerank@" + sf,
         pr.select(col("node").as("p_partkey"), col("deg").as("degree"),
-          col("pr").as("pagerank_ppm")))
-      handles.foreach(_.unpersist(false))
-      out.orderBy("p_partkey")
+          col("pr").as("pagerank_ppm"))).orderBy("p_partkey")
       }
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e), deg AS (SELECT u AS node, COUNT(*) AS deg FROM sym GROUP BY 1), nn AS (SELECT COUNT(*) AS c FROM deg), r0 AS (SELECT node, deg, ROUND(1000000.0 / nn.c + 1e-9, 6) AS pr FROM deg CROSS JOIN nn), r1 AS (SELECT d.node, d.deg, ROUND(150000.0 / nn.c + 0.85 * CAST(SUM(CAST(ROUND(r.pr / r.deg + 1e-9, 6) AS DECIMAL(18,6))) AS DOUBLE) + 1e-9, 6) AS pr FROM sym s JOIN r0 r ON r.node = s.u JOIN deg d ON d.node = s.v CROSS JOIN nn GROUP BY d.node, d.deg, nn.c), r2 AS (SELECT d.node, d.deg, ROUND(150000.0 / nn.c + 0.85 * CAST(SUM(CAST(ROUND(r.pr / r.deg + 1e-9, 6) AS DECIMAL(18,6))) AS DOUBLE) + 1e-9, 6) AS pr FROM sym s JOIN r1 r ON r.node = s.u JOIN deg d ON d.node = s.v CROSS JOIN nn GROUP BY d.node, d.deg, nn.c), r3 AS (SELECT d.node, d.deg, ROUND(150000.0 / nn.c + 0.85 * CAST(SUM(CAST(ROUND(r.pr / r.deg + 1e-9, 6) AS DECIMAL(18,6))) AS DOUBLE) + 1e-9, 6) AS pr FROM sym s JOIN r2 r ON r.node = s.u JOIN deg d ON d.node = s.v CROSS JOIN nn GROUP BY d.node, d.deg, nn.c), r4 AS (SELECT d.node, d.deg, ROUND(150000.0 / nn.c + 0.85 * CAST(SUM(CAST(ROUND(r.pr / r.deg + 1e-9, 6) AS DECIMAL(18,6))) AS DOUBLE) + 1e-9, 6) AS pr FROM sym s JOIN r3 r ON r.node = s.u JOIN deg d ON d.node = s.v CROSS JOIN nn GROUP BY d.node, d.deg, nn.c), r5 AS (SELECT d.node, d.deg, ROUND(150000.0 / nn.c + 0.85 * CAST(SUM(CAST(ROUND(r.pr / r.deg + 1e-9, 6) AS DECIMAL(18,6))) AS DOUBLE) + 1e-9, 6) AS pr FROM sym s JOIN r4 r ON r.node = s.u JOIN deg d ON d.node = s.v CROSS JOIN nn GROUP BY d.node, d.deg, nn.c) SELECT node AS p_partkey, deg AS degree, pr AS pagerank_ppm FROM r5 ORDER BY p_partkey"""),
@@ -871,9 +821,6 @@ object Clusters extends OpGroup {
       val out = labels.join(sizes, "label")
         .select(col("node").as("p_partkey"), col("label").as("community"),
           col("community_size"))
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_label_propagation@" + sf, out).orderBy("p_partkey")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e), l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym), v1 AS (SELECT s.v AS node, l.label, COUNT(*) AS c FROM sym s JOIN l0 l ON l.node = s.u GROUP BY 1, 2), l1 AS (SELECT node, label FROM v1 QUALIFY ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, label ASC) = 1), v2 AS (SELECT s.v AS node, l.label, COUNT(*) AS c FROM sym s JOIN l1 l ON l.node = s.u GROUP BY 1, 2), l2 AS (SELECT node, label FROM v2 QUALIFY ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, label ASC) = 1), v3 AS (SELECT s.v AS node, l.label, COUNT(*) AS c FROM sym s JOIN l2 l ON l.node = s.u GROUP BY 1, 2), l3 AS (SELECT node, label FROM v3 QUALIFY ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, label ASC) = 1), cs AS (SELECT label, COUNT(*) AS community_size FROM l3 GROUP BY label) SELECT l3.node AS p_partkey, l3.label AS community, cs.community_size FROM l3 JOIN cs ON cs.label = l3.label ORDER BY p_partkey"""),
@@ -924,9 +871,6 @@ object Clusters extends OpGroup {
             (col("deg_a") + col("deg_b") - col("shared"))).as("jaccard"))
       // Result pin off the shared edge lineage, then free (clusterCc
       // hygiene: only the result's blocks outlive the op).
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_neighbor_jaccard@" + sf, out).orderBy("u", "v")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e), deg AS (SELECT u AS node, COUNT(*) AS deg FROM sym GROUP BY 1), w AS (SELECT s1.v AS a, s2.v AS b, COUNT(*) AS shared FROM sym s1 JOIN sym s2 ON s1.u = s2.u AND s1.v < s2.v GROUP BY 1, 2 HAVING COUNT(*) >= 3) SELECT w.a AS u, w.b AS v, CAST(w.shared AS BIGINT) AS shared, CAST(da.deg AS BIGINT) AS deg_a, CAST(db.deg AS BIGINT) AS deg_b, ROUND(1e-9 + CAST(w.shared AS DOUBLE) / (da.deg + db.deg - w.shared), 6) AS jaccard FROM w JOIN deg da ON da.node = w.a JOIN deg db ON db.node = w.b ORDER BY u, v"""),
@@ -968,9 +912,6 @@ object Clusters extends OpGroup {
       val out = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
         .join(deg0, "node")
         .select(col("node").as("p_partkey"), col("degree0"), col("core_degree"))
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_kcore_peel@" + sf, out).orderBy("p_partkey")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e), d0 AS (SELECT u AS node, COUNT(*) AS d FROM sym GROUP BY 1), k1 AS (SELECT node FROM d0 WHERE d >= 3), s1 AS (SELECT s.u, s.v FROM sym s JOIN k1 a ON a.node = s.u JOIN k1 b ON b.node = s.v), d1 AS (SELECT u AS node, COUNT(*) AS d FROM s1 GROUP BY 1), k2 AS (SELECT node FROM d1 WHERE d >= 3), s2 AS (SELECT s.u, s.v FROM s1 s JOIN k2 a ON a.node = s.u JOIN k2 b ON b.node = s.v), d2 AS (SELECT u AS node, COUNT(*) AS d FROM s2 GROUP BY 1), k3 AS (SELECT node FROM d2 WHERE d >= 3), s3 AS (SELECT s.u, s.v FROM s2 s JOIN k3 a ON a.node = s.u JOIN k3 b ON b.node = s.v), cd AS (SELECT u AS node, COUNT(*) AS d FROM s3 GROUP BY 1) SELECT cd.node AS p_partkey, CAST(d0.d AS BIGINT) AS degree0, CAST(cd.d AS BIGINT) AS core_degree FROM cd JOIN d0 ON d0.node = cd.node ORDER BY p_partkey"""),
@@ -1151,9 +1092,6 @@ object Clusters extends OpGroup {
         .filter(col("shared") >= 3)
         .select(col("a").as("u"), col("b").as("v"), col("shared"),
           col("aa").cast("double").as("adamic_adar"))
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_adamic_adar@" + sf, out).orderBy("u", "v")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e), deg AS (SELECT u AS node, COUNT(*) AS deg FROM sym GROUP BY 1), w AS (SELECT s1.v AS a, s2.v AS b, COUNT(*) AS shared, SUM(CAST(ROUND(1e-9 + 1.0 / ln(CAST(deg AS DOUBLE)), 6) AS DECIMAL(18,6))) AS aa FROM sym s1 JOIN sym s2 ON s1.u = s2.u AND s1.v < s2.v JOIN deg ON deg.node = s1.u GROUP BY 1, 2 HAVING COUNT(*) >= 3) SELECT a AS u, b AS v, CAST(shared AS BIGINT) AS shared, CAST(aa AS DOUBLE) AS adamic_adar FROM w ORDER BY u, v"""),
@@ -1195,9 +1133,6 @@ object Clusters extends OpGroup {
         // filter at the deployment's own similarity floor.
         .filter(col("cos_sim") >= 0.05)
         .select("u", "v", "w", "n_u", "n_v", "cos_sim")
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_item_cf_cosine@" + sf, out).orderBy("u", "v")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), co AS (SELECT a.l_partkey AS u, b.l_partkey AS v, COUNT(*) AS w FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), n AS (SELECT l_partkey AS node, COUNT(*) AS n_orders FROM items GROUP BY 1), s AS (SELECT co.u, co.v, co.w, nu.n_orders AS n_u, nv.n_orders AS n_v, ROUND(1e-9 + CAST(co.w AS DOUBLE) / (sqrt(CAST(nu.n_orders AS DOUBLE)) * sqrt(CAST(nv.n_orders AS DOUBLE))), 6) AS cos_sim FROM co JOIN n nu ON nu.node = co.u JOIN n nv ON nv.node = co.v) SELECT u, v, w, n_u, n_v, cos_sim FROM s WHERE cos_sim >= 0.05 ORDER BY u, v"""),
@@ -1232,9 +1167,6 @@ object Clusters extends OpGroup {
       val out = deg.join(reach2, Seq("u"))
         .select(col("u").as("p_partkey"), col("degree"), col("n_reach2"),
           r6(col("degree").cast("double") / col("n_reach2")).as("direct_share"))
-      // Result pin registered per-op (r14, r13 verdict item 5): the swap
-      // frees the previous invocation's pin, keeping the block manager
-      // flat across a long session (ResultPinsSpec).
       ResultPins.swap(s, "graph_2hop_reach@" + sf, out).orderBy("p_partkey")
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem JOIN part ON p_partkey = l_partkey WHERE p_size >= 40), e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey GROUP BY 1, 2), sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e), deg AS (SELECT u, COUNT(*) AS degree FROM sym GROUP BY 1), r2 AS (SELECT u, COUNT(*) AS n_reach2 FROM (SELECT DISTINCT u, r FROM (SELECT u, v AS r FROM sym UNION ALL SELECT s1.u, s2.v AS r FROM sym s1 JOIN sym s2 ON s2.u = s1.v) z WHERE u <> r) d GROUP BY u) SELECT deg.u AS p_partkey, deg.degree, r2.n_reach2, ROUND(1e-9 + CAST(deg.degree AS DOUBLE) / r2.n_reach2, 6) AS direct_share FROM deg JOIN r2 ON r2.u = deg.u ORDER BY p_partkey"""),

@@ -799,20 +799,6 @@ object Dedup extends OpGroup {
     */
   private[graft] val lshBuildCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Checkpointed batch-side band signatures, one entry per (session,
-    * sfDir, fixture fingerprint) — see the probe's cache note.
-    */
-  private val batchBandsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Release the cached batch-band checkpoints (spec hygiene). */
-  private[graft] def lshProbeReset(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val vs = batchBandsCache.values().asScala.toList
-    batchBandsCache.clear()
-    vs.foreach(Vectors.releaseCheckpoint)
-  }
-
   /** Fingerprint-keyed on-disk home of the base-corpus LSH index: a
     * regenerated documents table invalidates the artifacts (the
     * [[Tables.cachedDir]] contract — superseded generations vacuumed),
@@ -959,28 +945,20 @@ object Dedup extends OpGroup {
     // signature pass is batch-only either way).
     val batchTok = docTokens(s, sf)
       .filter(pmod(col("doc_id"), lit(batchMod)) === batchRem)
-    val batchBands = bandKeys(batchTok)
     // The fused candidate join below reads ALL band directories in one
     // scan (a probe touches every band, so per-band pruning never
     // skipped a byte; the on-disk band_idx partitioning still serves
     // compaction and band-level rebuilds, which DO address one
     // directory). The batch side is localCheckpoint'd ONCE PER (session, sf,
-    // fixture) — it is the bounded incremental increment (B rows per
+    // fixture, batch) — it is the bounded incremental increment (B rows per
     // batch doc, never the corpus) and the per-band filters must not
-    // recompute the signature pass; the fingerprint-keyed cache (the
-    // copurchaseEdges discipline) keeps repeat invocations from
-    // stacking fresh checkpoint blocks in the block manager — the
-    // clusterCc leak class the r10 round already paid for once.
-    val batchB = {
-      val k = (s, sf, s"${Tables.fingerprint(sf, "documents")}|$batchMod:$batchRem")
-      val hit = batchBandsCache.get(k)
-      if (hit != null) hit
-      else {
-        val built = batchBands.localCheckpoint()
-        val raced = batchBandsCache.putIfAbsent(k, built)
-        if (raced == null) built
-        else { Vectors.releaseCheckpoint(built); raced }
-      }
+    // recompute the signature pass; the fingerprint-keyed memo (kind
+    // "lsh_batch", dropped by `ResultPins.forget`) keeps repeat
+    // invocations from stacking fresh checkpoint blocks in the block
+    // manager.
+    val batchB = ResultPins.memo(s, sf, "lsh_batch",
+        s"${Tables.fingerprint(sf, "documents")}|$batchMod:$batchRem") {
+      bandKeys(batchTok).localCheckpoint()
     }
     // ONE fused candidate join on the compound (band_idx, bkey) key
     // (r15): the former per-band loop union'd B separate joins, each

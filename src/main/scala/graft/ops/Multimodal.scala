@@ -401,7 +401,7 @@ object Multimodal extends OpGroup {
     */
   private val phashHamming = Op(
     "mm_phash_hamming",
-    (s, sf) => {
+    (s, sf) => ResultPins.scoped(s) { pin =>
       import s.implicits._
       val hashesPlan = Tables.documents(s, sf)
         .filter(col("doc_id") % 3 === 2)
@@ -419,10 +419,8 @@ object Multimodal extends OpGroup {
         }.toDF("doc_id", "ahash", "dhash")
       // The hash catalog is consumed three times (two band-join sides +
       // the final degree join); without a pin every reference re-decodes
-      // every image. Eager RDD pin + free, clusterCc hygiene.
-      val hashesRdd = hashesPlan.rdd
-      hashesRdd.persist(); hashesRdd.count(): Unit
-      val hashes = s.createDataFrame(hashesRdd, hashesPlan.schema)
+      // every image. Eager scope pin, freed when the op returns.
+      val (hashes, _) = pin(hashesPlan)
       val bands = hashes.select(col("doc_id"), col("ahash"),
         explode(array((0 until 4).map(i => struct(lit(i).as("b"),
           shiftright(col("ahash"), i * 16).bitwiseAND(lit(0xffffL)).as("k"))): _*)).as("bd"))
@@ -441,12 +439,7 @@ object Multimodal extends OpGroup {
           lpad(hex(col("ahash")), 16, "0").as("ahash_hex"),
           lpad(hex(col("dhash")), 16, "0").as("dhash_hex"),
           coalesce(col("n_near"), lit(0L)).as("n_near"))
-      // Result pin via the per-op swap registry (r14, r13 verdict item
-      // 5): previous invocations' pins are freed, only the hash-catalog
-      // intermediate is released here as before.
-      val pinned = ResultPins.swap(s, "mm_phash_hamming@" + sf, out)
-      hashesRdd.unpersist(false)
-      pinned.orderBy("doc_id")
+      ResultPins.swap(s, "mm_phash_hamming@" + sf, out).orderBy("doc_id")
     },
     None,
   )

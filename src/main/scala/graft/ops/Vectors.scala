@@ -172,11 +172,11 @@ object Vectors extends OpGroup {
     * rows — run at few partitions (the CC-loop / streaming
     * state-volume rationale: per-partition task overhead dominates tiny
     * shuffles at core-count fan-out), restored before the
-    * lazily-executed search plan. Memoized per (session, sfDir) like
-    * the PQ model: one index build serves every probe of the session.
+    * lazily-executed search plan. Memoized like the PQ model: one index
+    * build serves every probe of the session.
     */
   private[graft] def ivfCentroids(s: SparkSession, sf: String): DataFrame =
-    memoized(s, sf, "ivf") {
+    graft.ResultPins.memo(s, sf, "ivf", Tables.fingerprint(sf, "embeddings")) {
       val v = normed(s, sf)
       graft.Tables.withConfs(s,
         Seq("spark.sql.shuffle.partitions" -> "8")) {
@@ -188,7 +188,7 @@ object Vectors extends OpGroup {
           c = meanCentroids(
             nearestCells(v, c, 1).select(col("cid"), col("embedding")))
             .localCheckpoint()
-          releaseCheckpoint(prev) // the superseded iterate's blocks, eagerly
+          graft.ResultPins.releaseCheckpoint(prev) // the superseded iterate's blocks, eagerly
         }
         c
       }
@@ -366,7 +366,7 @@ object Vectors extends OpGroup {
       for (_ <- 1 to 2) {
         val prev = c
         c = cmean(pqNearestCoarse(emb, c)).localCheckpoint()
-        releaseCheckpoint(prev)
+        graft.ResultPins.releaseCheckpoint(prev)
       }
       c
     }
@@ -413,85 +413,10 @@ object Vectors extends OpGroup {
       for (_ <- 1 to 2) {
         val prev = c
         c = mean(pqNearest(sub, c).select(col("m"), col("cid"), col("sv"))).localCheckpoint()
-        releaseCheckpoint(prev)
+        graft.ResultPins.releaseCheckpoint(prev)
       }
       c
     }
-  }
-
-  /** One training pass: coarse quantizer + residual codebook + the
-    * subvector relation they both index — so ops never train twice.
-    * The subvector relation materializes ONCE (localCheckpoint) at full
-    * fan-out: every Lloyd iteration joins it against K = 256 codebook
-    * rows (n·M·K candidate rows — the heavy stage now that codebooks
-    * are byte-wide), so it must neither recompute per eager step nor
-    * sit at the training shuffles' deliberately small partition count.
-    *
-    * The trained model MEMOIZES per (session, sfDir): an index is built
-    * once and queried many times — vec_pq_codes and vec_pq_adc_topk in
-    * one session share one training pass, exactly as a production index
-    * build would. Training is order-free-deterministic (decimal means),
-    * so memoization is semantically invisible; `pqModelReset()` drops
-    * the cache for specs that deliberately retrain.
-    */
-  /** Memo store for trained models (PQ, IVF), keyed
-    * (session, sfDir, kind). Training is order-free-deterministic, so
-    * memoization is semantically invisible; [[pqModelReset]] drops it
-    * for specs that deliberately retrain.
-    */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
-
-  /** Free the block-manager storage behind a localCheckpointed DataFrame
-    * NOW rather than when the ContextCleaner gets to the orphaned RDD:
-    * walk the plan for the checkpoint's LogicalRDD and unpersist it.
-    * No-op on plans that were never checkpointed.
-    */
-  private[ops] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  private def releaseModel(v: AnyRef): Unit = {
-    def rel(x: Any): Unit = x match {
-      case d: org.apache.spark.sql.Dataset[_] => releaseCheckpoint(d.toDF())
-      case _                                  => ()
-    }
-    v match {
-      case p: Product => p.productIterator.foreach(rel)
-      case other      => rel(other)
-    }
-  }
-
-  /** get / putIfAbsent rather than computeIfAbsent: training runs
-    * multi-job Spark work, which must not execute inside the map's bin
-    * lock (it would block every concurrent cache access). A duplicate
-    * build that loses the race releases its storage and adopts the
-    * winner — training is order-free-deterministic, so the two are
-    * identical anyway.
-    */
-  private def memoized[T <: AnyRef](s: SparkSession, sf: String, kind: String)(build: => T): T = {
-    val k = (s, sf, kind)
-    val hit = modelCache.get(k)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val built = build
-      val raced = modelCache.putIfAbsent(k, built)
-      if (raced == null) built
-      else { releaseModel(built); raced.asInstanceOf[T] }
-    }
-  }
-
-  /** Drop every memoized model AND release its checkpointed storage —
-    * retrain specs and long-lived sessions scoring many sfDirs both
-    * need the executor storage back, not just the map entries gone.
-    */
-  private[graft] def pqModelReset(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val vs = modelCache.values().asScala.toList
-    modelCache.clear()
-    vs.foreach(releaseModel)
   }
 
   /** Training-pass counter — spec instrumentation for the persistence
@@ -501,8 +426,25 @@ object Vectors extends OpGroup {
     */
   private[graft] val pqTrainCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** One training pass: coarse quantizer + residual codebook + the
+    * subvector relation they both index — so ops never train twice.
+    * The subvector relation materializes ONCE (localCheckpoint) at full
+    * fan-out: every Lloyd iteration joins it against K = 256 codebook
+    * rows (n·M·K candidate rows — the heavy stage now that codebooks
+    * are byte-wide), so it must neither recompute per eager step nor
+    * sit at the training shuffles' deliberately small partition count.
+    *
+    * The trained model MEMOIZES per (session, sfDir, embeddings
+    * fingerprint) in [[graft.ResultPins.memo]]: an index is built once
+    * and queried many times — vec_pq_codes and vec_pq_adc_topk in one
+    * session share one training pass, exactly as a production index
+    * build would, and a regenerated embeddings file trains afresh.
+    * Training is order-free-deterministic (decimal means), so
+    * memoization is semantically invisible; `ResultPins.forget("pq",
+    * "ivf")` drops the models for specs that deliberately retrain.
+    */
   private[graft] def pqModel(s: SparkSession, sf: String): (DataFrame, DataFrame, DataFrame) =
-    memoized(s, sf, "pq") {
+    graft.ResultPins.memo(s, sf, "pq", Tables.fingerprint(sf, "embeddings")) {
       // Self-contained registration: in a fresh session whose FIRST op
       // is a PQ one, nothing else has registered the codegen kernel yet
       // (surfaced by PqIndexSpec's cold-session path).
@@ -1720,7 +1662,7 @@ object Vectors extends OpGroup {
     // 512k-row distance aggregations each Lloyd round, which want the
     // session's full fan-out; the job floor is already amortized by the
     // pinned exploded relation.
-    (s, sf) => {
+    (s, sf) => graft.ResultPins.scoped(s) { pin =>
       import org.apache.spark.sql.expressions.Window
       // The exploded (vec_id, dim, x) relation feeds SEVEN downstream
       // passes (3 assignment joins, 2 centroid updates, sizes, init);
@@ -1728,12 +1670,9 @@ object Vectors extends OpGroup {
       // result is materialized (the clusterCc hygiene) — recomputing
       // the scan+explode per pass was the whole-op bottleneck (5.9 s →
       // the dominant term drops to the genuine per-round agg work).
-      val eRaw = Tables.spread(s, Tables.embeddings(s, sf))
+      val (e, _) = pin(Tables.spread(s, Tables.embeddings(s, sf))
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "xf")))
-        .select(col("vec_id"), col("dim"), col("xf").cast("double").as("x"))
-      val eRdd = eRaw.rdd
-      eRdd.persist(); eRdd.count(): Unit
-      val e = s.createDataFrame(eRdd, eRaw.schema)
+        .select(col("vec_id"), col("dim"), col("xf").cast("double").as("x")))
       def distances(cent: DataFrame): DataFrame =
         e.join(broadcast(cent), "dim")
           .groupBy(col("vec_id"), col("cid"))
@@ -1759,10 +1698,7 @@ object Vectors extends OpGroup {
         .select(col("cid"), col("n_assigned"), r6(col("inertia_raw")).as("inertia"),
           r6(col("ck")).as("centroid_checksum"))
       // Materialize the 4-row result off the pinned lineage, then free it.
-      val outRdd = out.rdd
-      outRdd.persist(); outRdd.count(): Unit
-      eRdd.unpersist(false)
-      s.createDataFrame(outRdd, out.schema).orderBy("cid")
+      graft.ResultPins.swap(s, "vec_kmeans_fixed@" + sf, out).orderBy("cid")
     },
     Some("""WITH e AS (SELECT vec_id, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)), c0 AS (SELECT CAST(vec_id AS INT) AS cid, dim, x AS c FROM e WHERE vec_id < 4), d1 AS (SELECT e.vec_id, c0.cid, SUM(CAST(ROUND(1e-9 + (e.x - c0.c) * (e.x - c0.c), 6) AS DECIMAL(18,6))) AS dist FROM e JOIN c0 ON c0.dim = e.dim GROUP BY 1, 2), a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk FROM d1) z WHERE rk = 1), c1 AS (SELECT a1.cid, e.dim, ROUND(1e-9 + CAST(SUM(CAST(ROUND(1e-9 + e.x, 6) AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS c FROM e JOIN a1 ON a1.vec_id = e.vec_id GROUP BY 1, 2), d2 AS (SELECT e.vec_id, c1.cid, SUM(CAST(ROUND(1e-9 + (e.x - c1.c) * (e.x - c1.c), 6) AS DECIMAL(18,6))) AS dist FROM e JOIN c1 ON c1.dim = e.dim GROUP BY 1, 2), a2 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk FROM d2) z WHERE rk = 1), c2 AS (SELECT a2.cid, e.dim, ROUND(1e-9 + CAST(SUM(CAST(ROUND(1e-9 + e.x, 6) AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS c FROM e JOIN a2 ON a2.vec_id = e.vec_id GROUP BY 1, 2), df AS (SELECT e.vec_id, c2.cid, SUM(CAST(ROUND(1e-9 + (e.x - c2.c) * (e.x - c2.c), 6) AS DECIMAL(18,6))) AS dist FROM e JOIN c2 ON c2.dim = e.dim GROUP BY 1, 2), af AS (SELECT vec_id, cid, dist FROM (SELECT vec_id, cid, dist, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk FROM df) z WHERE rk = 1), sizes AS (SELECT cid, COUNT(*) AS n_assigned, CAST(SUM(CAST(dist AS DECIMAL(18,6))) AS DOUBLE) AS inertia_raw FROM af GROUP BY 1), checks AS (SELECT cid, CAST(SUM(CAST(c AS DECIMAL(18,6))) AS DOUBLE) AS ck FROM c2 GROUP BY 1) SELECT sizes.cid AS cid, n_assigned, ROUND(1e-9 + inertia_raw, 6) AS inertia, ROUND(1e-9 + ck, 6) AS centroid_checksum FROM sizes JOIN checks ON checks.cid = sizes.cid ORDER BY cid"""),
   )

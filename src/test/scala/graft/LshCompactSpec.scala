@@ -23,7 +23,7 @@ class LshCompactSpec extends SparkSpec {
 
   test("compaction is content-neutral, one file per band dir, leaves generations intact, crash-safe") {
     // Fresh append lineage on the smoke fixture.
-    ops.Dedup.lshProbeReset()
+    ResultPins.forget("lsh_batch")
     Tables.rmTree(new java.io.File(ops.Dedup.lshAppendDir(spark, sf)))
 
     val appended = SparkEntry.queries("dedup_minhash_index_append")(spark, sf)

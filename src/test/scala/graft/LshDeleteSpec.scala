@@ -11,7 +11,7 @@ package graft
 class LshDeleteSpec extends SparkSpec {
 
   test("tombstoned probe ≡ append minus retired rows; tombstone commit is crash-safe") {
-    ops.Dedup.lshProbeReset()
+    ResultPins.forget("lsh_batch")
     Tables.rmTree(new java.io.File(ops.Dedup.lshAppendDir(spark, sf)))
 
     val appended = SparkEntry.queries("dedup_minhash_index_append")(spark, sf)

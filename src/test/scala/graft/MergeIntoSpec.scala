@@ -81,7 +81,9 @@ class MergeIntoSpec extends SparkSpec {
       .select("mo").distinct().count()
     assert(matchedMonths > 0 && matchedMonths < totalMonths,
       s"fixture degenerate: matched $matchedMonths of $totalMonths months")
-    assert(replaced != null && replaced.toLong == matchedMonths,
+    assert(graft.sources.MemCatalog.lastReplacedGroups.containsKey(storeKey),
+      s"no MERGE recorded its replaced groups under '$storeKey'")
+    assert(replaced.toLong == matchedMonths,
       s"COW replaced $replaced groups; expected exactly the $matchedMonths matched months " +
         s"(whole-table would be $totalMonths) — runtime group filtering did not engage")
   }

@@ -12,7 +12,7 @@ class PqIndexSpec extends SparkSpec {
     // Start from a clean slate: no on-disk artifacts, no memoized model.
     Tables.rmTree(new java.io.File(
       Tables.tmp("graft_pq_index")))
-    ops.Vectors.pqModelReset()
+    ResultPins.forget("pq", "ivf")
 
     // In-session path trains (memoized); the first reload call builds
     // the artifacts from that same deterministic model and re-reads
@@ -28,7 +28,7 @@ class PqIndexSpec extends SparkSpec {
 
     // Cold-session simulation: drop the in-memory model. The reload op
     // must answer from the files alone — zero training passes.
-    ops.Vectors.pqModelReset()
+    ResultPins.forget("pq", "ivf")
     val trainsBefore = ops.Vectors.pqTrainCounter.get()
     val r2 = SparkEntry.queries("vec_pq_index_reload")(spark, sf).collect().toSet
     assert(ops.Vectors.pqTrainCounter.get() == trainsBefore,

@@ -11,17 +11,15 @@ class ResultPinsSpec extends SparkSpec {
   test("repeat invocations do not grow the pinned-RDD set; releaseAll frees the result pins") {
     def pinnedCount: Int = spark.sparkContext.getPersistentRDDs.size
 
-    // Two pin-carrying ops from different files (graph kernel + phash).
-    SparkEntry.queries("graph_2hop_reach")(spark, sf).count(): Unit
-    SparkEntry.queries("graph_adamic_adar")(spark, sf).count(): Unit
+    // Pin-carrying ops from two files (graph kernels + vector k-means).
+    val keys = Seq("graph_2hop_reach", "graph_adamic_adar", "vec_kmeans_fixed")
+    keys.foreach(k => SparkEntry.queries(k)(spark, sf).count(): Unit)
     val afterFirst = pinnedCount
 
     // The r13 behavior grew this by one per invocation (hundreds across
     // a min-of-2 bench sweep); the swap registry must keep it FLAT.
-    for (_ <- 1 to 3) {
-      SparkEntry.queries("graph_2hop_reach")(spark, sf).count(): Unit
-      SparkEntry.queries("graph_adamic_adar")(spark, sf).count(): Unit
-    }
+    for (_ <- 1 to 3)
+      keys.foreach(k => SparkEntry.queries(k)(spark, sf).count(): Unit)
     assert(pinnedCount == afterFirst,
       s"repeat invocations grew the pinned-RDD set ($afterFirst -> $pinnedCount)")
 

@@ -168,7 +168,7 @@ class Sf1WitnessSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val fn = SparkEntry.queries("dedup_minhash_index_append")
     fn(spark, sf).count(): Unit // JVM/codegen warm pass on the smoke tier
     def stages(dir: String): (Double, Double, Double) = {
-      ops.Dedup.lshProbeReset()
+      ResultPins.forget("lsh_batch")
       Tables.rmTree(new java.io.File(ops.Dedup.lshAppendDir(spark, dir)))
       val t0 = System.nanoTime(); ops.Dedup.lshAppendBase(spark, dir)
       val build = (System.nanoTime() - t0) / 1e9

@@ -170,7 +170,7 @@ class VectorSpec extends SparkSpec {
     first.count()
     // Reset the memo so the second call RETRAINS — without it the
     // comparison would be the cached plan against itself (vacuous).
-    ops.Vectors.pqModelReset()
+    ResultPins.forget("pq", "ivf")
     val again = ops.Vectors.ivfCentroids(spark, sf).select(col("cid"), col("cvec"))
     assert(first.exceptAll(again).count() == 0 && again.exceptAll(first).count() == 0,
       "IVF Lloyd training must be order-free (decimal means)")
@@ -187,7 +187,7 @@ class VectorSpec extends SparkSpec {
     // Reset the memoized model so the second run RETRAINS from scratch —
     // the assertion is that training itself (decimal-mean Lloyd) is
     // order-free, not that a cached model equals itself.
-    ops.Vectors.pqModelReset()
+    ResultPins.forget("pq", "ivf")
     val again = SparkEntry.queries("vec_pq_codes")(spark, sf)
     assert(codes.exceptAll(again).count() == 0 && again.exceptAll(codes).count() == 0,
       "PQ training must be deterministic")
