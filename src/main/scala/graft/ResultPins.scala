@@ -16,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
   *    key, [[releaseAll]] every pin.
   *  - Per-corpus MEMOS ([[memo]]): a trained model or a shared graph,
   *    built once per (session, sfDir, kind, input fingerprint) and kept
-  *    until [[forget]] drops its kind. [[releaseAll]] leaves them alone:
-  *    a long session re-serves them across pin teardowns.
+  *    until [[forget]] drops its kind or a rewritten input supersedes
+  *    it. [[releaseAll]] leaves them alone: a long session re-serves
+  *    them across pin teardowns.
   *  - SCOPED intermediates ([[scoped]]): pinned for one op's body and
   *    freed when it exits, also on exception.
   *
@@ -133,31 +134,43 @@ object ResultPins {
     pins.keySet().asScala.toList.foreach(release)
   }
 
-  /** Per-corpus memo store, keyed (session, sfDir, kind, inputs). */
-  private val memos =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String), AnyRef]()
+  /** Per-corpus memo store, keyed (session, sfDir, kind, variant, inputs). */
+  private val memos = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String, String, String), AnyRef]()
 
   /** The relation(s) `build` makes for `sf`, built once per session and
-    * input version: `inputs` is the caller's fingerprint of what the
-    * build reads (the [[Tables.fingerprint]] of its tables, plus any
-    * build parameter), so a regenerated fixture builds afresh instead of
-    * serving the old corpus. Builds are order-free-deterministic, so the
-    * memo is semantically invisible. get / putIfAbsent rather than
-    * computeIfAbsent: a build runs multi-job Spark work, which must not
-    * execute inside the map's bin lock. A duplicate build that loses the
-    * race releases every checkpointed Dataset in what it built and adopts
-    * the winner's.
+    * input version: `inputs` is the caller's fingerprint of the tables
+    * the build reads, so a regenerated fixture builds afresh instead of
+    * serving the old corpus, and `variant` names a build parameter whose
+    * values live side by side (a batch residue). A miss first releases
+    * the entries of the same (session, sfDir, kind) built from other
+    * inputs: they describe a corpus that no longer exists, and would
+    * otherwise hold their checkpoints until [[forget]]. Builds are
+    * order-free-deterministic, so the memo is semantically invisible.
+    * get / putIfAbsent rather than computeIfAbsent: a build runs
+    * multi-job Spark work, which must not execute inside the map's bin
+    * lock. A duplicate build that loses the race releases every
+    * checkpointed Dataset in what it built and adopts the winner's.
     */
-  def memo[T <: AnyRef](s: SparkSession, sf: String, kind: String, inputs: String)
-      (build: => T): T = {
-    val k = (s, sf, kind, inputs)
+  def memo[T <: AnyRef](s: SparkSession, sf: String, kind: String, inputs: String,
+      variant: String = "")(build: => T): T = {
+    val k = (s, sf, kind, variant, inputs)
     val hit = memos.get(k)
     if (hit != null) hit.asInstanceOf[T]
     else {
+      drop(o => o._1 == s && o._2 == sf && o._3 == kind && o._5 != inputs)
       val built = build
       val raced = memos.putIfAbsent(k, built)
       if (raced == null) built
       else { releaseMemo(built); raced.asInstanceOf[T] }
+    }
+  }
+
+  private def drop(which: ((SparkSession, String, String, String, String)) => Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    memos.keySet().asScala.toList.filter(which).foreach { k =>
+      val v = memos.remove(k)
+      if (v != null) releaseMemo(v)
     }
   }
 
@@ -177,13 +190,7 @@ object ResultPins {
     * sessions scoring many sfDirs both need the executor storage back,
     * not just the entries gone.
     */
-  def forget(kinds: String*): Unit = {
-    import scala.jdk.CollectionConverters._
-    memos.keySet().asScala.toList.filter(k => kinds.contains(k._3)).foreach { k =>
-      val v = memos.remove(k)
-      if (v != null) releaseMemo(v)
-    }
-  }
+  def forget(kinds: String*): Unit = drop(k => kinds.contains(k._3))
 
   /** Run `body` with a pin for loop and multi-use intermediates: the pin
     * materializes a frame as a persisted RDD and returns the rewrapped

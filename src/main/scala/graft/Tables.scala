@@ -172,39 +172,32 @@ object Tables {
     f.delete(): Unit
   }
 
-  /** Crash-safe single-rename commit of a staged artifact GENERATION
-    * (r14, the r13 verdict's item 1 + r13 ADVICE): `stage` writes the
-    * whole generation under a hidden `.name.staging` temp dir, and the
-    * ONLY step that makes it live is one atomic rename to `dir/name`.
-    * Mode("append") is banned on index artifacts — the live tree is
-    * never written in place — so a crash anywhere during staging leaves
-    * only a staging orphan that the next attempt discards and restages;
-    * a retry can never double-append. The staging dir is UNIQUE PER
-    * ATTEMPT (r15, the r14 verdict's item 2): under a shared
-    * `.name.staging` path, two live writers racing the same (dir, name)
-    * could interleave — the second attempt's opening rmTree deletes the
-    * first's half-written files mid-stage, and because Spark writers
-    * use unique part-file names, a tree mixing BOTH attempts' part
-    * files can win the rename and commit a generation with doubled
-    * rows (deterministic contents don't save you; file SETS differ).
-    * With `.name.staging-<nonce>` no attempt can ever see another's
-    * files; racing commits meet only at the atomic rename, where the
-    * loser's move throws and it serves the winner's generation
-    * (contents are deterministic, so both stagings are the same rows).
-    * The leading dot also keeps any in-flight staging invisible to
-    * parquet directory listings; a crash's orphaned attempt dir is
-    * swept by the next commit to the same name.
+  /** Write-once commit of the artifact `dir/name`; returns its live path.
+    * `stage` writes the whole artifact under a hidden
+    * `.name.staging-<nonce>` dir, and the ONLY step that makes it live is
+    * one atomic rename to `dir/name`. A live artifact is never written
+    * in place, so a crash anywhere during staging leaves only a staging
+    * orphan, and a retry restages from scratch: it can never
+    * double-append. The staging dir is unique per attempt: under a
+    * shared path, a second writer's opening sweep would delete the
+    * first's half-written files mid-stage, and since Spark writers use
+    * unique part-file names, a tree mixing both attempts' part files
+    * could win the rename and commit doubled rows. With a per-attempt
+    * dir, racing writers meet only at the atomic rename; the loser's
+    * move throws and it serves the winner's artifact (stagings are
+    * deterministic, so both hold the same rows). The leading dot keeps
+    * an in-flight staging invisible to parquet directory listings; a
+    * crash's orphaned attempt dir is swept by a later commit to the
+    * same name.
     */
-  def commitStaged(dir: String, name: String)(stage: String => Unit): Unit = {
+  def commitStaged(dir: String, name: String)(stage: String => Unit): String = {
     val live = new java.io.File(dir, name)
-    if (live.exists()) return
-    // Sweep crash orphans. The legacy un-suffixed path can be discarded
-    // unconditionally — no live writer ever stages there now. Suffixed
-    // attempt dirs might belong to a LIVE sibling attempt (deleting one
-    // mid-write is exactly the pre-r15 hazard), so those are swept only
-    // when older than an hour — far beyond any staging write. Fresh
-    // ones cost only disk until their owner commits or a later commit
-    // to the same name sweeps them.
+    if (live.exists()) return live.getPath
+    // Sweep crash orphans. The un-suffixed path has no writer, so it is
+    // discarded unconditionally. A suffixed attempt dir might belong to
+    // a LIVE sibling attempt, so it is swept only when older than an
+    // hour, far beyond any staging write; a fresh one costs only disk
+    // until its owner commits or a later commit sweeps it.
     rmTree(new java.io.File(dir, s".$name.staging"))
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(s".$name.staging-") &&
@@ -218,18 +211,54 @@ object Tables {
       java.nio.file.Files.move(tmp.toPath, live.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
     catch {
-      // Lost a commit race: a sibling's rename landed first. Its
-      // generation is byte-equivalent (deterministic staging), so drop
-      // ours and serve the committed one. The JDK's atomic-move path
-      // surfaces the rename(2) ENOTEMPTY/EEXIST as a PLAIN
-      // FileSystemException, not the typed subclasses (measured in
-      // CommitStagedSpec's race — the pre-r15 typed-only catch never
-      // actually fired), so lost-race detection is "the live tree now
-      // exists"; anything else (ENOSPC, EACCES, …) is a real failure
-      // and rethrows with the staging left for post-mortem.
+      // Lost a commit race: a sibling's rename landed first, with the
+      // same rows, so drop ours and serve it. The JDK's atomic move
+      // surfaces rename(2)'s ENOTEMPTY/EEXIST as a PLAIN
+      // FileSystemException, not the typed subclasses (CommitStagedSpec's
+      // race), so a lost race is "the live tree now exists"; anything
+      // else (ENOSPC, EACCES, ...) is a real failure and rethrows with
+      // the staging left for post-mortem.
       case e: java.nio.file.FileSystemException =>
         if (live.exists()) rmTree(tmp) else throw e
     }
+    live.getPath
+  }
+
+  /** The read set of a generational index at `dir`, oldest first, as
+    * (generation, root): the highest committed fold `<fold><k>` (or, with
+    * none, the base at `dir` itself as generation 0), then every committed
+    * `<gen><g>` above it and at most `through`. A fold absorbs the
+    * generations it is numbered by, so those never enter the set again.
+    */
+  def generationRoots(dir: String, gen: String = "gen", fold: String = "",
+      through: Int = Int.MaxValue): Seq[(Int, String)] = {
+    val names = Option(new java.io.File(dir).list()).getOrElse(Array.empty[String]).toSeq
+    def numbered(prefix: String): Seq[Int] = names.collect {
+      case n if prefix.nonEmpty && n.startsWith(prefix) && n.length > prefix.length &&
+          n.drop(prefix.length).forall(_.isDigit) => n.drop(prefix.length).toInt
+    }
+    val base = numbered(fold).maxOption.fold(0 -> dir)(k => k -> s"$dir/$fold$k")
+    base +: numbered(gen).filter(g => g > base._1 && g <= through).sorted
+      .map(g => g -> s"$dir/$gen$g")
+  }
+
+  /** One part of a generational index: its relation under every root,
+    * each read from its own root so partition discovery (and directory
+    * pruning) applies to every branch of the union.
+    */
+  def generationPart(s: SparkSession, roots: Seq[(Int, String)], part: String): DataFrame =
+    roots.map { case (_, r) => parquet(s, s"$r/$part") }.reduce(_.unionByName(_))
+
+  /** Retire what a committed compaction absorbed: the base `parts` at
+    * `dir` and every `gen<g>` dir. Refuses unless `dir/compact` is
+    * committed, so every deletion target is redundant before any
+    * deletion starts and a crash mid-vacuum loses nothing.
+    */
+  def vacuumGenerations(dir: String, parts: Seq[String]): Unit = {
+    require(new java.io.File(dir, "compact").exists(),
+      s"refusing to vacuum $dir: no committed compaction — generations are still the only copy")
+    (parts.map(p => s"$dir/$p") ++ generationRoots(dir).tail.map(_._2))
+      .foreach(p => rmTree(new java.io.File(p)))
   }
 
   /** Total bytes under a directory tree (compaction sizing input). */
@@ -292,17 +321,18 @@ object Tables {
     }
   }
 
-  /** Fingerprint-keyed cache directory `parent/prefix_fp`. Superseded
-    * sibling dirs (same prefix, different fingerprint — i.e. caches of an
-    * older generation of the source) are deleted first, so regeneration
-    * doesn't accumulate one copy per fingerprint in /tmp.
+  /** Home of the write-once artifacts of `kind` derived from `table` of
+    * the tier `sfDir`: `tmp(kind)/<sfDir>_<fingerprint>`, so a regenerated
+    * source can never serve a stale artifact. Superseded siblings (same
+    * tier, older fingerprint) are deleted first, so regeneration does not
+    * keep one copy per fingerprint. Artifacts land here through
+    * [[commitStaged]] only.
     */
-  def cachedDir(parent: String, prefix: String, fp: String): String = {
-    // A `_vN` layout-version suffix on the parent supersedes the
-    // unsuffixed tree and every lower version: sweep them, or stale
-    // artifacts from retired layouts accumulate under tmpdir forever on
-    // long-lived hosts (the generation vacuum below only covers
-    // superseded fingerprints INSIDE one parent — r14 advice).
+  def artifactDir(kind: String, sfDir: String, table: String): String = {
+    val parent = tmp(kind)
+    // A `_vN` layout-version suffix on the kind supersedes the
+    // unsuffixed tree and every lower version: sweep them, or artifacts
+    // of retired layouts accumulate under tmpdir on long-lived hosts.
     parent match {
       case s"${base}_v${n}" if n.forall(_.isDigit) =>
         (new java.io.File(base) +:
@@ -310,7 +340,8 @@ object Tables {
           .filter(_.isDirectory).foreach(rmTree)
       case _ => ()
     }
-    val keep = s"${prefix}_$fp"
+    val prefix = sfDir.replaceAll("[^a-zA-Z0-9.]", "_")
+    val keep = s"${prefix}_${fingerprint(sfDir, table)}"
     Option(new java.io.File(parent).listFiles()).getOrElse(Array.empty)
       .filter(d => d.getName.startsWith(s"${prefix}_") && d.getName != keep)
       .foreach(rmTree)

@@ -346,30 +346,28 @@ object Clusters extends OpGroup {
   )
 
   /** Fingerprint-keyed home of the persisted text-side cluster
-    * assignment (r14) — the keep-one table's incremental lineage.
+    * assignment — the keep-one table's incremental lineage.
     */
   private[graft] def ccAppendDir(s: org.apache.spark.sql.SparkSession, sf: String): String =
-    Tables.cachedDir(
-      Tables.tmp("graft_cc_app_v2"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "documents"))
+    Tables.artifactDir("graft_cc_app_v2", sf, "documents")
 
   /** Generation 0 of the text-side incremental lineage: the even-half
     * keep-one assignment (both pairers restricted to even-even pairs —
     * a one-time O(corpus) build, like every index base) plus the even
     * half's SimHash fingerprints, persisted so the append recomputes
     * signatures for the BATCH only (the MinHash side needs no extra
-    * artifact: the r13/r14 APPEND-MAINTAINED LSH INDEX already serves
+    * artifact: the APPEND-MAINTAINED LSH INDEX already serves
     * base signatures, and its probe IS the odd-incident verified
-    * Jaccard edge set).
+    * Jaccard edge set). Each part commits by its own staged rename.
     */
   private def ccAppendBase(s: org.apache.spark.sql.SparkSession, sf: String): String = {
     val dir = ccAppendDir(s, sf)
-    if (Seq("assign", "simhash").exists(p =>
-        !new java.io.File(s"$dir/$p", "_SUCCESS").exists())) {
+    Tables.commitStaged(dir, "simhash") {
       Dedup.simhashFingerprints(s, sf)
         .filter(pmod(col("doc_id"), lit(10)) =!= 1)
-        .write.mode("overwrite").parquet(s"$dir/simhash")
+        .write.parquet(_)
+    }
+    Tables.commitStaged(dir, "assign") { tmp =>
       val basePairs = Dedup.minhashLshPairs(s, sf)
         .select(col("a_doc_id").as("u"), col("b_doc_id").as("v"))
         .union(Dedup.simhashHammingPairs(s, sf)
@@ -379,7 +377,7 @@ object Clusters extends OpGroup {
         .filter(pmod(col("doc_id"), lit(10)) =!= 1)
         .select(col("doc_id").as("node"))
       connectedComponents(baseNodes, basePairs, "cc_append_base@" + sf)
-        .write.mode("overwrite").parquet(s"$dir/assign")
+        .write.parquet(tmp)
     }
     dir
   }

@@ -780,11 +780,11 @@ object Dedup extends OpGroup {
   )
 
   // ---------------------------------------------------------------------
-  // Text-LSH index persistence (r11, the r10 verdict's item 4): the
-  // build-once/serve-many lifecycle for corpus dedup, mirroring
-  // vec_pq_index_reload's discipline for vectors. The BASE corpus
-  // (doc_id % 2 == 0 — the already-ingested half) is signed once and its
-  // (doc_id, band_idx, band-key) relation, token bitmasks, and the
+  // Text-LSH index persistence: the build-once/serve-many lifecycle for
+  // corpus dedup, mirroring vec_pq_index_reload's discipline for
+  // vectors. The BASE corpus (doc_id % 2 == 0 — the already-ingested
+  // half) is signed once and its (doc_id, band_idx, band-key) relation,
+  // token bitmasks, and the
   // word→bit dictionary are persisted as fingerprint-keyed parquet; an
   // INCREMENTAL batch (doc_id % 2 == 1 — the incoming half) then computes
   // only ITS OWN signatures and probes the RELOADED index — zero
@@ -801,14 +801,11 @@ object Dedup extends OpGroup {
 
   /** Fingerprint-keyed on-disk home of the base-corpus LSH index: a
     * regenerated documents table invalidates the artifacts (the
-    * [[Tables.cachedDir]] contract — superseded generations vacuumed),
+    * [[Tables.artifactDir]] contract — superseded generations vacuumed),
     * so a stale index can never serve a new corpus.
     */
   private[graft] def lshIndexDir(s: SparkSession, sf: String): String =
-    Tables.cachedDir(
-      Tables.tmp("graft_lsh_index"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "documents"))
+    Tables.artifactDir("graft_lsh_index", sf, "documents")
 
   /** The index relations computed FRESH (no persistence) — the build
     * path, and LshIndexSpec's reload ≡ recompute reference. Band keys are
@@ -900,24 +897,29 @@ object Dedup extends OpGroup {
     */
   private[graft] def lshPersistedIndex(s: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val dir = lshIndexDir(s, sf)
-    val parts = Seq("bands", "masks", "vocab")
-    if (!parts.forall(p => new java.io.File(s"$dir/$p", "_SUCCESS").exists())) {
-      lshBuildCounter.incrementAndGet()
-      val (bands, masks, vocab) = lshIndexFresh(s, sf)
-      // SERVE LAYOUT (r12, the r11 verdict's item 3): bands are
-      // partitioned by band_idx on disk, so each of the probe's
-      // per-band joins scans exactly one directory (PartitionFilters
-      // [band_idx = b] — LshIndexSpec asserts it on the probe plan).
-      // Band jobs are independent at 100 TB: schedule, rebuild, or
-      // re-shard one band without touching the other B−1.
-      bands.write.mode("overwrite").partitionBy("band_idx").parquet(s"$dir/bands")
-      masks.write.mode("overwrite").parquet(s"$dir/masks")
-      vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-    }
+    val dir = lshBase(s, sf, lshIndexDir(s, sf))
     (Tables.parquet(s, s"$dir/bands"),
       Tables.parquet(s, s"$dir/masks"),
       Tables.parquet(s, s"$dir/vocab"))
+  }
+
+  /** Write the base-corpus index under `dir` once, each part by its own
+    * staged rename. The signature pass is deterministic, so parts
+    * committed by different attempts compose; it runs (and counts as a
+    * build) only when a part is missing.
+    */
+  private def lshBase(s: SparkSession, sf: String, dir: String): String = {
+    lazy val (bands, masks, vocab) = {
+      lshBuildCounter.incrementAndGet()
+      lshIndexFresh(s, sf)
+    }
+    // SERVE LAYOUT: bands are partitioned by band_idx on disk, so a
+    // band job (schedule, rebuild, re-shard at 100 TB) addresses one
+    // directory without touching the other B−1.
+    Tables.commitStaged(dir, "bands")(bands.write.partitionBy("band_idx").parquet(_))
+    Tables.commitStaged(dir, "masks")(masks.write.parquet(_))
+    Tables.commitStaged(dir, "vocab")(vocab.write.parquet(_))
+    dir
   }
 
   /** Probe an incremental batch against index relations (reloaded or
@@ -957,7 +959,7 @@ object Dedup extends OpGroup {
     // invocations from stacking fresh checkpoint blocks in the block
     // manager.
     val batchB = ResultPins.memo(s, sf, "lsh_batch",
-        s"${Tables.fingerprint(sf, "documents")}|$batchMod:$batchRem") {
+        Tables.fingerprint(sf, "documents"), s"$batchMod:$batchRem") {
       bandKeys(batchTok).localCheckpoint()
     }
     // ONE fused candidate join on the compound (band_idx, bkey) key
@@ -1015,23 +1017,20 @@ object Dedup extends OpGroup {
     * the candidate set engine-portable, and the verify is the exact
     * set-Jaccard DuckDB computes from the raw text.
     */
-  /** Fingerprint-keyed home of the APPEND-maintained index (r13) — a
+  /** Fingerprint-keyed home of the APPEND-maintained index — a
     * SEPARATE lineage from [[lshIndexDir]]'s build-once index: this one
     * is mutated by ingest appends, so the reload key's artifacts stay
     * pristine.
     */
   private[graft] def lshAppendDir(s: SparkSession, sf: String): String =
-    Tables.cachedDir(
-      // _v2: the prefix carries the LAYOUT version (multi-generation
-      // dirs since r14) — a layout change must bump it so stale
-      // artifacts from an older build can never half-serve the new
-      // read path (the fingerprint in the dir NAME only invalidates on
-      // data changes, not code-layout changes).
-      Tables.tmp("graft_lsh_index_app_v2"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "documents"))
+    // _v2: the kind carries the LAYOUT version (multi-generation dirs) —
+    // a layout change must bump it so stale artifacts from an older
+    // build can never half-serve the new read path (the fingerprint in
+    // the dir NAME only invalidates on data changes, not code-layout
+    // changes).
+    Tables.artifactDir("graft_lsh_index_app_v2", sf, "documents")
 
-  /** INCREMENTAL INDEX MAINTENANCE (r13) — the third act of the
+  /** INCREMENTAL INDEX MAINTENANCE — the third act of the
     * build-once / serve-many lifecycle: a daily-ingest batch (the odd
     * parity) is APPENDED into the persisted index instead of
     * triggering a rebuild. Maintenance cost is O(batch), never
@@ -1062,35 +1061,21 @@ object Dedup extends OpGroup {
     * Returns the index dir (the seam LshIndexSpec uses to snapshot the
     * base file set before an append).
     */
-  private[graft] def lshAppendBase(s: SparkSession, sf: String): String = {
-    val dir = lshAppendDir(s, sf)
-    val parts = Seq("bands", "masks", "vocab")
-    if (!parts.forall(p => new java.io.File(s"$dir/$p", "_SUCCESS").exists())) {
-      val (bands, masks, vocab) = lshIndexFresh(s, sf)
-      bands.write.mode("overwrite").partitionBy("band_idx").parquet(s"$dir/bands")
-      masks.write.mode("overwrite").parquet(s"$dir/masks")
-      vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-    }
-    dir
-  }
+  private[graft] def lshAppendBase(s: SparkSession, sf: String): String =
+    lshBase(s, sf, lshAppendDir(s, sf))
 
   private[graft] def lshAppendedIndex(s: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val dir = lshAppendBase(s, sf)
-    // CRASH-SAFE COMMIT (r14, the r13 verdict's item 1 + r13 ADVICE):
-    // the r13 formulation mode("append")ed into the live band/mask/vocab
-    // dirs and only then dropped an _APPENDED marker — a crash between
-    // the first append write and the marker left a half-appended index
-    // that a retry would append AGAIN (duplicate band rows inflate
-    // candidates, duplicate vocab rows double-assign bits). Now the
-    // whole ingest generation stages under `.gen1.staging` and goes
-    // live via ONE atomic rename; the base dirs are never written
-    // after generation 0, so a retry restages from scratch and can
-    // never double-ingest (LshIndexSpec's kill-between-write-and-commit
-    // negative test).
-    // MULTI-GENERATION ingest (r14): the odd half arrives as TWO daily
-    // batches (gen g ingests doc_id % 4 == 2g − 1), each committed by
-    // its own atomic rename — so the dictionary extension COMPOSES:
+    // Each ingest generation stages whole and goes live by ONE atomic
+    // rename, and the base dirs are never written after generation 0:
+    // a crash leaves only a staging orphan, and a retry restages from
+    // scratch instead of appending again (duplicate band rows would
+    // inflate candidates, duplicate vocab rows double-assign bits;
+    // LshIndexSpec's kill-between-write-and-commit test). The odd half
+    // arrives as TWO daily batches (gen g ingests doc_id % 4 == 2g − 1),
+    // each committed by its own rename — so the dictionary extension
+    // COMPOSES:
     // gen2's new words number after base + gen1, and a near-dup pair
     // spanning generations (a gen2 doc sharing gen1-vocabulary words)
     // still popcounts exactly (LshIndexSpec's cross-generation OOV
@@ -1104,6 +1089,9 @@ object Dedup extends OpGroup {
       lshAppendedPart(s, dir, "masks"),
       lshAppendedPart(s, dir, "vocab"))
   }
+
+  /** The parts of an LSH index base, and of each of its generations. */
+  private[graft] val LshParts = Seq("bands", "masks", "vocab")
 
   /** Stage daily-ingest generation `g` (doc_id % 4 == 2g − 1) under
     * `tmp`: append-only dictionary extension against `priorVocab` (new
@@ -1132,21 +1120,13 @@ object Dedup extends OpGroup {
 
   /** The word→bit dictionary through generation `g` (0 = base only). */
   private def lshVocabThrough(s: SparkSession, dir: String, g: Int): DataFrame =
-    (0 to g).map {
-      case 0 => Tables.parquet(s, s"$dir/vocab")
-      case i => Tables.parquet(s, s"$dir/gen$i/vocab")
-    }.reduce(_.unionByName(_))
+    Tables.generationPart(s, Tables.generationRoots(dir, through = g), "vocab")
 
   /** One relation of the append-maintained index: generation 0 ∪ every
-    * committed ingest generation (each read from its own root so
-    * band_idx partition discovery — and therefore per-band directory
-    * pruning — applies to every branch of the union).
+    * committed ingest generation.
     */
   private[graft] def lshAppendedPart(s: SparkSession, dir: String, part: String): DataFrame =
-    (0 to LshIngestGens).map {
-      case 0 => Tables.parquet(s, s"$dir/$part")
-      case g => Tables.parquet(s, s"$dir/gen$g/$part")
-    }.reduce(_.unionByName(_))
+    Tables.generationPart(s, Tables.generationRoots(dir), part)
 
   /** Execute a probe-serving keyed op's dataflow under the small-data
     * conf scope and pin its (batch-bounded) result — the graph-kernel
@@ -1258,40 +1238,22 @@ object Dedup extends OpGroup {
     val dir = lshAppendDir(s, sf)
     // A committed compaction serves on its own: do NOT touch the
     // generation dirs once compact exists, or a vacuumed index (fifth
-    // act, [[lshVacuumGenerations]]) would re-materialize the
+    // act, [[Tables.vacuumGenerations]]) would re-materialize the
     // generations it just retired.
     if (!new java.io.File(dir, "compact").exists()) {
       lshAppendedIndex(s, sf) // ensure gen1 is committed first
       Tables.commitStaged(dir, "compact") { tmp =>
         lshAppendedPart(s, dir, "bands").repartition(col("band_idx"))
-          .write.mode("overwrite").partitionBy("band_idx").parquet(s"$tmp/bands")
+          .write.partitionBy("band_idx").parquet(s"$tmp/bands")
         // Masks/vocab are unpartitioned; the fixture-right size is one
         // file (at scale: bytes-targeted file count, same knob as above).
-        lshAppendedPart(s, dir, "masks").repartition(1)
-          .write.mode("overwrite").parquet(s"$tmp/masks")
-        lshAppendedPart(s, dir, "vocab").repartition(1)
-          .write.mode("overwrite").parquet(s"$tmp/vocab")
+        lshAppendedPart(s, dir, "masks").repartition(1).write.parquet(s"$tmp/masks")
+        lshAppendedPart(s, dir, "vocab").repartition(1).write.parquet(s"$tmp/vocab")
       }
     }
     (Tables.parquet(s, s"$dir/compact/bands"),
       Tables.parquet(s, s"$dir/compact/masks"),
       Tables.parquet(s, s"$dir/compact/vocab"))
-  }
-
-  /** VACUUM (r14) — the FIFTH lifecycle act: once a compaction is
-    * committed, the generation dirs it absorbed are dead weight (their
-    * rows live in `compact/`, byte-equal — LshCompactSpec pins the
-    * multiset) and a production layout retires them on a retention
-    * schedule (the `etl_vacuum_retention` recipe applied to the index).
-    * Refuses unless the compaction is committed — the guard that makes
-    * vacuum safe to crash through: every deletion target is redundant
-    * by the time any deletion starts.
-    */
-  private[graft] def lshVacuumGenerations(dir: String): Unit = {
-    require(new java.io.File(dir, "compact").exists(),
-      s"refusing to vacuum $dir: no committed compaction — generations are still the only copy")
-    (Seq("bands", "masks", "vocab") ++ (1 to LshIngestGens).map(g => s"gen$g"))
-      .foreach(p => Tables.rmTree(new java.io.File(dir, p)))
   }
 
   /** The keyed op: compact the append-aged index, then run the append
@@ -1344,29 +1306,14 @@ object Dedup extends OpGroup {
   private[graft] val AutoCompactMaxGens = 2
   private[graft] val AutoCompactTargetBytes = 64L << 20 // 64 MB: parquet-scanner sweet spot
 
-  /** (highest committed fold, generations committed after it). */
-  private[graft] def lshAutoRoots(dir: String): (Option[Int], Seq[Int]) = {
-    val names = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).toSeq
-    val folds = names.filter(_.startsWith("auto_compact_g"))
-      .map(_.stripPrefix("auto_compact_g").toInt)
-    val top = folds.maxOption
-    val gens = names.filter(_.startsWith("auto_gen"))
-      .map(_.stripPrefix("auto_gen").toInt)
-      .filter(g => top.forall(g > _)).sorted
-    (top, gens)
-  }
-
-  private def lshAutoRootDirs(dir: String): Seq[String] = {
-    val (top, gens) = lshAutoRoots(dir)
-    (top match {
-      case Some(k) => Seq(s"$dir/auto_compact_g$k")
-      case None => Seq(dir) // the shared base build lives at the root
-    }) ++ gens.map(g => s"$dir/auto_gen$g")
-  }
+  /** The policy lineage's read set: the highest committed fold (or the
+    * shared base build at the root), then the generations after it.
+    */
+  private def lshAutoRoots(dir: String): Seq[(Int, String)] =
+    Tables.generationRoots(dir, gen = "auto_gen", fold = "auto_compact_g")
 
   private def lshAutoPart(s: SparkSession, dir: String, part: String): DataFrame =
-    lshAutoRootDirs(dir).map(r => Tables.parquet(s, s"$r/$part")).reduce(_.unionByName(_))
+    Tables.generationPart(s, lshAutoRoots(dir), part)
 
   /** The append-commit-time policy check. Returns true iff a fold
     * committed. Exposed with explicit policy knobs so the spec can
@@ -1374,27 +1321,24 @@ object Dedup extends OpGroup {
     */
   private[graft] def lshAutoMaybeCompact(s: SparkSession, dir: String,
       maxGens: Int, targetBytes: Long): Boolean = {
-    val (top, gens) = lshAutoRoots(dir)
-    if (gens.size < maxGens) false
+    val roots = lshAutoRoots(dir)
+    if (roots.size - 1 < maxGens) false
     else {
-      val hw = gens.max
-      val srcRoots = lshAutoRootDirs(dir)
-      Tables.commitStaged(dir, s"auto_compact_g$hw") { tmp =>
-        Seq("bands", "masks", "vocab").foreach { part =>
-          val rel = srcRoots.map(r => Tables.parquet(s, s"$r/$part")).reduce(_.unionByName(_))
-          val bytes = srcRoots.map(r => Tables.dirBytes(new java.io.File(s"$r/$part"))).sum
+      Tables.commitStaged(dir, s"auto_compact_g${roots.last._1}") { tmp =>
+        LshParts.foreach { part =>
+          val rel = Tables.generationPart(s, roots, part)
+          val bytes = roots.map { case (_, r) => Tables.dirBytes(new java.io.File(s"$r/$part")) }.sum
           val rows = rel.count()
           val perFile = math.max(1L, targetBytes / math.max(1L, bytes / math.max(1L, rows)))
           val clustered =
             if (part == "bands") rel.repartition(col("band_idx")) else rel.repartition(1)
-          val w = clustered.write.mode("overwrite").option("maxRecordsPerFile", perFile)
+          val w = clustered.write.option("maxRecordsPerFile", perFile)
           (if (part == "bands") w.partitionBy("band_idx") else w).parquet(s"$tmp/$part")
         }
       }
       // Vacuum the folded inputs — AFTER the fold is live, and never
       // the shared base build at the dir root.
-      gens.foreach(g => Tables.rmTree(new java.io.File(dir, s"auto_gen$g")))
-      top.foreach(k => Tables.rmTree(new java.io.File(dir, s"auto_compact_g$k")))
+      roots.collect { case (_, r) if r != dir => Tables.rmTree(new java.io.File(r)) }
       true
     }
   }
@@ -1411,8 +1355,7 @@ object Dedup extends OpGroup {
       : (DataFrame, DataFrame, DataFrame) = {
     val dir = lshAppendBase(s, sf)
     for (g <- 1 to LshIngestGens) {
-      val (top, gens) = lshAutoRoots(dir)
-      if (g > math.max(top.getOrElse(0), (0 +: gens).max)) {
+      if (g > lshAutoRoots(dir).last._1) {
         Tables.commitStaged(dir, s"auto_gen$g") { tmp =>
           stageLshIngest(s, sf, tmp, g, lshAutoPart(s, dir, "vocab"))
         }

@@ -222,10 +222,7 @@ object Scalars extends OpGroup {
     * (r14): a regenerated events fixture invalidates the artifact.
     */
   private[graft] def variantDir(s: org.apache.spark.sql.SparkSession, sf: String): String =
-    Tables.cachedDir(
-      Tables.tmp("graft_variant_rt"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "events"))
+    Tables.artifactDir("graft_variant_rt", sf, "events")
 
   /** VARIANT WRITE ROUND-TRIP (r14, the r13 verdict's item 7) — the
     * other half of the Spark 4 semi-structured story:
@@ -244,12 +241,14 @@ object Scalars extends OpGroup {
   private val jsonVariantRoundtrip = Op(
     "json_variant_roundtrip",
     (s, sf) => {
-      val dir = variantDir(s, sf)
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      // The artifact is the fingerprinted dir itself: commit it by name
+      // in its kind's root.
+      val home = new java.io.File(variantDir(s, sf))
+      val dir = Tables.commitStaged(home.getParent, home.getName) {
         Tables.events(s, sf)
           .select(col("event_id"), col("event_type"),
             parse_json(col("props")).as("v"))
-          .write.mode("overwrite").parquet(dir)
+          .write.parquet(_)
       }
       Tables.parquet(s, dir)
         .select(

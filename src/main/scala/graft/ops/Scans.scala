@@ -60,12 +60,9 @@ object Scans extends OpGroup {
       import org.apache.spark.sql.types._
       // Fingerprinted cache dir: a regenerated region.parquet invalidates
       // the CSV snapshot instead of silently re-reading the stale one.
-      val dir = Tables.cachedDir(Tables.tmp("graft_csv"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "region")) + "/region"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_csv", sf, "region"), "region") {
         Tables.region(s, sf).orderBy("r_regionkey")
-          .coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+          .coalesce(1).write.option("header", "true").csv(_)
       }
       val schema = StructType(Seq(
         StructField("r_regionkey", IntegerType),
@@ -88,17 +85,17 @@ object Scans extends OpGroup {
     * across the per-day files — no spread anywhere on this path
     * (both plan-asserted in PartitionedScanSpec).
     */
-  def partitionedEventsDir(s: org.apache.spark.sql.SparkSession, sf: String): String = {
-    val dir = graft.Tables.cachedDir(
-      Tables.tmp("graft_part_events"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      graft.Tables.fingerprint(sf, "events")) + "/events"
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+  def partitionedEventsDir(s: org.apache.spark.sql.SparkSession, sf: String): String =
+    eventsByDate(s, sf, "graft_part_events")
+
+  /** events written once as one `event_date=…/` directory per day. */
+  private def eventsByDate(s: org.apache.spark.sql.SparkSession, sf: String,
+      kind: String): String =
+    Tables.commitStaged(Tables.artifactDir(kind, sf, "events"), "events") {
       Tables.events(s, sf)
         .withColumn("event_date", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("event_date").parquet(dir)
-    dir
-  }
+        .write.partitionBy("event_date").parquet(_)
+    }
 
   private val partitionedMultifile = Op(
     "src_partitioned_multifile",
@@ -128,13 +125,9 @@ object Scans extends OpGroup {
   private val partitionedSink = Op(
     "sink_partitioned_parquet",
     (s, sf) => {
-      val dir = graft.Tables.cachedDir(
-        Tables.tmp("graft_part_sink"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "orders")) + "/orders"
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        Tables.orders(s, sf).write.mode("overwrite")
-          .partitionBy("o_orderpriority").parquet(dir)
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_part_sink", sf, "orders"), "orders") {
+        Tables.orders(s, sf).write.partitionBy("o_orderpriority").parquet(_)
+      }
       Tables.parquet(s, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
         .groupBy(col("o_orderstatus"))
@@ -161,12 +154,9 @@ object Scans extends OpGroup {
   private val orcRoundtrip = Op(
     "src_orc_roundtrip",
     (s, sf) => {
-      val dir = graft.Tables.cachedDir(
-        Tables.tmp("graft_orc"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "customer")) + "/customer"
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        Tables.customer(s, sf).write.mode("overwrite").orc(dir)
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_orc", sf, "customer"), "customer") {
+        Tables.customer(s, sf).write.orc(_)
+      }
       s.read.orc(dir)
         .filter(col("c_acctbal") > 0)
         .groupBy(col("c_mktsegment"))
@@ -192,14 +182,10 @@ object Scans extends OpGroup {
     "etl_compact_small_files",
     (s, sf) => {
       val src = partitionedEventsDir(s, sf)
-      val dir = graft.Tables.cachedDir(
-        Tables.tmp("graft_compact"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "events")) + "/events"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_compact", sf, "events"), "events") { tmp =>
         val bytes = graft.Tables.dirBytes(new java.io.File(src))
         val target = math.max(1L, (bytes + (64L << 20) - 1) / (64L << 20)).toInt
-        Tables.parquet(s, src).repartition(target).write.mode("overwrite").parquet(dir)
+        Tables.parquet(s, src).repartition(target).write.parquet(tmp)
       }
       Tables.parquet(s, dir)
         .groupBy(col("event_type"))
@@ -249,17 +235,8 @@ object Scans extends OpGroup {
     * re-runnable; PartitionedScanSpec asserts untouched partitions keep
     * their files byte-identical.
     */
-  def backfillDir(s: org.apache.spark.sql.SparkSession, sf: String): String = {
-    val dir = graft.Tables.cachedDir(
-      Tables.tmp("graft_backfill"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      graft.Tables.fingerprint(sf, "events")) + "/events"
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      Tables.events(s, sf)
-        .withColumn("event_date", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("event_date").parquet(dir)
-    dir
-  }
+  def backfillDir(s: org.apache.spark.sql.SparkSession, sf: String): String =
+    eventsByDate(s, sf, "graft_backfill")
 
   private val backfillIdempotent = Op(
     "etl_backfill_partition",
@@ -296,19 +273,15 @@ object Scans extends OpGroup {
   private val schemaEvolution = Op(
     "src_schema_evolution",
     (s, sf) => {
-      val dir = graft.Tables.cachedDir(
-        Tables.tmp("graft_evolve"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "orders")) + "/orders"
-      if (!new java.io.File(s"$dir/gen=1", "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_evolve", sf, "orders"), "orders") { tmp =>
         val o = Tables.orders(s, sf)
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(s"$dir/gen=0")
+          .write.parquet(s"$tmp/gen=0")
         o.filter(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("o_orderpriority"))
-          .write.mode("overwrite").parquet(s"$dir/gen=1")
+          .write.parquet(s"$tmp/gen=1")
       }
       s.read.option("mergeSchema", "true").parquet(dir)
         .groupBy(coalesce(col("o_orderpriority"), lit("<pre-schema>")).as("priority"))
@@ -335,16 +308,12 @@ object Scans extends OpGroup {
     * locality itself — per-file spans narrower than the global range on
     * BOTH dims — is asserted in PartitionedScanSpec. Cache keyed on the
     * source fingerprint, superseded generations vacuumed
-    * ([[graft.Tables.cachedDir]]).
+    * ([[graft.Tables.artifactDir]]).
     */
   private val zorderLayout = Op(
     "etl_zorder_layout",
     (s, sf) => {
-      val dir = graft.Tables.cachedDir(
-        Tables.tmp("graft_zorder"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "events")) + "/events"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_zorder", sf, "events"), "events") {
         Tables.events(s, sf)
           .withColumn("day_nr",
             datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).cast("long"))
@@ -365,7 +334,7 @@ object Scans extends OpGroup {
           .repartitionByRange(8, col("zval"))
           .sortWithinPartitions(col("zval"))
           .drop("zval", "day_nr")
-          .write.mode("overwrite").parquet(dir)
+          .write.parquet(_)
       }
       Tables.parquet(s, dir)
         .groupBy(col("event_type"), date_trunc("month", col("ts")).cast("date").as("month"))
@@ -392,14 +361,11 @@ object Scans extends OpGroup {
   private val textLines = Op(
     "src_text_lines",
     (s, sf) => {
-      val dir = Tables.cachedDir(Tables.tmp("graft_text"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "documents")) + "/documents"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_text", sf, "documents"), "documents") { tmp =>
         val src = Tables.documents(s, sf).select(col("text"))
         require(src.filter(col("text").contains("\n") || col("text").contains("\r"))
           .isEmpty, "text snapshot requires newline-free documents")
-        src.coalesce(1).write.mode("overwrite").text(dir)
+        src.coalesce(1).write.text(tmp)
       }
       s.read.text(dir)
         .groupBy(expr("cast(length(value) as long) div 100 * 100").as("len_bucket"))
@@ -426,14 +392,11 @@ object Scans extends OpGroup {
     "src_jsonl_roundtrip",
     (s, sf) => {
       import org.apache.spark.sql.types._
-      val dir = Tables.cachedDir(Tables.tmp("graft_jsonl"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "documents")) + "/documents"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_jsonl", sf, "documents"), "documents") {
         Tables.documents(s, sf)
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
             col("source"), col("n_chars"))).as("value"))
-          .coalesce(1).write.mode("overwrite").text(dir)
+          .coalesce(1).write.text(_)
       }
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
@@ -466,16 +429,13 @@ object Scans extends OpGroup {
     "src_jsonl_corrupt_quarantine",
     (s, sf) => {
       import org.apache.spark.sql.types._
-      val dir = Tables.cachedDir(Tables.tmp("graft_jsonl_bad"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "documents")) + "/documents"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_jsonl_bad", sf, "documents"), "documents") {
         Tables.documents(s, sf)
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
             col("n_chars"))).as("j"), col("doc_id"))
           .select(when(pmod(col("doc_id"), lit(17)) === 0,
             substring(col("j"), 1, 20)).otherwise(col("j")).as("value"))
-          .coalesce(1).write.mode("overwrite").text(dir)
+          .coalesce(1).write.text(_)
       }
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
@@ -555,10 +515,7 @@ object Scans extends OpGroup {
     "src_csv_corrupt_quarantine",
     (s, sf) => {
       import org.apache.spark.sql.types._
-      val dir = Tables.cachedDir(Tables.tmp("graft_csv_bad"),
-        sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-        graft.Tables.fingerprint(sf, "documents")) + "/documents"
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      val dir = Tables.commitStaged(Tables.artifactDir("graft_csv_bad", sf, "documents"), "documents") { tmp =>
         // concat_ws silently DROPS null fields, which would shift the
         // rendered row and miscount it as quarantined (lang IS NULL
         // flag) instead of failing loudly — so a null lang/n_chars in
@@ -573,7 +530,7 @@ object Scans extends OpGroup {
               raise_error(lit("src_csv_corrupt_quarantine: NULL lang/n_chars in documents — concat_ws staging would drop the field")))
             .when(pmod(col("doc_id"), lit(13)) === 0, col("cut"))
             .otherwise(col("full")).as("value"))
-          .coalesce(1).write.mode("overwrite").text(dir)
+          .coalesce(1).write.text(tmp)
       }
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text_md5", StringType),

@@ -624,17 +624,14 @@ object Vectors extends OpGroup {
 
   /** Fingerprint-keyed on-disk home of the trained IVFADC index: a
     * regenerated embeddings table invalidates the artifacts (the
-    * [[Tables.cachedDir]] contract — superseded generations vacuumed),
+    * [[Tables.artifactDir]] contract — superseded generations vacuumed),
     * so a stale index can never serve a new corpus.
     */
   private[graft] def pqIndexDir(s: SparkSession, sf: String): String =
-    Tables.cachedDir(
-      Tables.tmp("graft_pq_index"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "embeddings"))
+    Tables.artifactDir("graft_pq_index", sf, "embeddings")
 
-  /** PERSIST-or-RELOAD the trained IVFADC index (r10, the r9 verdict's
-    * missing lifecycle half): a real 100 TB vector index is built ONCE
+  /** PERSIST-or-RELOAD the trained IVFADC index: a real 100 TB vector
+    * index is built ONCE
     * and SERVED — the in-session model memo dies with the session, so
     * the trained coarse quantizer (Kc rows), residual codebook (M·K
     * rows) and the codes relation (n×M — the only corpus-scale
@@ -650,25 +647,33 @@ object Vectors extends OpGroup {
     */
   private[graft] def pqPersistedModel(s: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val dir = pqIndexDir(s, sf)
-    val parts = Seq("coarse", "codebook", "codes")
-    if (!parts.forall(p => new java.io.File(s"$dir/$p", "_SUCCESS").exists())) {
-      val (coarse, sub, cb) = pqModel(s, sf)
-      val codes = pqNearest(sub, cb)
-        .select(col("vec_id"), col("ccid"), col("m"), col("cid"))
-      coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-      cb.write.mode("overwrite").parquet(s"$dir/codebook")
-      // SERVE LAYOUT (r12, the r11 verdict's item 3): the codes
-      // relation — the only corpus-scale artifact — is partitioned by
-      // coarse cell, so the nprobe-pruned search reads ~nprobe/Kc of
-      // the index as DIRECTORY pruning (PqIndexSpec asserts
-      // PartitionFilters on the reload-probe plan), which is the
-      // entire point of IVF at 100 TB.
-      codes.write.mode("overwrite").partitionBy("ccid").parquet(s"$dir/codes")
-    }
+    val dir = pqBase(s, sf, pqIndexDir(s, sf), lit(true))
     (Tables.parquet(s, s"$dir/coarse"),
       Tables.parquet(s, s"$dir/codebook"),
       Tables.parquet(s, s"$dir/codes"))
+  }
+
+  /** Write the index base under `dir` once: the trained model (coarse
+    * quantizer, residual codebook) and the codes of the vectors `keep`
+    * selects. Each part commits by its own staged rename. Training is
+    * deterministic, so parts committed by different attempts compose,
+    * and the model is fetched only when a part is missing.
+    */
+  private def pqBase(s: SparkSession, sf: String, dir: String, keep: Column): String = {
+    lazy val (coarse, sub, cb) = pqModel(s, sf)
+    Tables.commitStaged(dir, "coarse")(coarse.write.parquet(_))
+    Tables.commitStaged(dir, "codebook")(cb.write.parquet(_))
+    // SERVE LAYOUT: the codes relation, the only corpus-scale artifact,
+    // is partitioned by coarse cell, so the nprobe-pruned search reads
+    // ~nprobe/Kc of the index as DIRECTORY pruning (PqIndexSpec asserts
+    // PartitionFilters on the reload-probe plan), which is the entire
+    // point of IVF at 100 TB.
+    Tables.commitStaged(dir, "codes") {
+      pqNearest(sub, cb).filter(keep)
+        .select(col("vec_id"), col("ccid"), col("m"), col("cid"))
+        .write.partitionBy("ccid").parquet(_)
+    }
+    dir
   }
 
   /** Reload-and-search: serve `vec_pq_adc_probe`'s exact query path
@@ -720,32 +725,29 @@ object Vectors extends OpGroup {
     None,
   )
 
-  /** Fingerprint-keyed home of the APPEND-maintained IVFADC index (r13)
-    * — the vector dual of the text index's `dedup_minhash_index_append`
+  /** Fingerprint-keyed home of the APPEND-maintained IVFADC index — the
+    * vector dual of the text index's `dedup_minhash_index_append`
     * lineage, separate from [[pqIndexDir]] so the reload key's
     * artifacts stay pristine.
     */
   private[graft] def pqAppendDir(s: SparkSession, sf: String): String =
-    Tables.cachedDir(
-      // _v2: the prefix carries the LAYOUT version (multi-generation
-      // dirs since r14) — a layout change must bump it so stale
-      // artifacts from an older build can never half-serve the new
-      // read path (the fingerprint in the dir NAME only invalidates on
-      // data changes, not code-layout changes).
-      Tables.tmp("graft_pq_index_app_v2"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "embeddings"))
+    // _v2: the kind carries the LAYOUT version (multi-generation dirs) —
+    // a layout change must bump it so stale artifacts from an older
+    // build can never half-serve the new read path (the fingerprint in
+    // the dir NAME only invalidates on data changes, not code-layout
+    // changes).
+    Tables.artifactDir("graft_pq_index_app_v2", sf, "embeddings")
 
-  /** FROZEN-MODEL INDEX GROWTH (r13): production vector indexes retrain
+  /** FROZEN-MODEL INDEX GROWTH: production vector indexes retrain
     * the quantizer rarely and ENCODE daily — the model (coarse cells +
     * residual codebooks) is a fixed artifact, the codes relation is the
     * thing that grows. Generation 0 persists the trained model plus the
     * EVEN-parity vectors' codes (cell-partitioned, the serve layout);
     * the append encodes the ODD-parity batch with the RELOADED model —
     * never a training pass — and commits its codes as a new ccid-
-    * partitioned GENERATION directory (one atomic rename, r14 crash-safe
-    * protocol). Growth cost is O(batch) encode +
-    * commit; the model files and every base code file survive untouched
+    * partitioned GENERATION directory (one atomic rename,
+    * [[Tables.commitStaged]]). Growth cost is O(batch) encode + commit;
+    * the model files and every base code file survive untouched
     * (PqIndexSpec asserts the file set). Because the model is the same
     * deterministic artifact the reload key persists, the appended
     * index's membership converges to ALL vectors and the probe must
@@ -756,38 +758,21 @@ object Vectors extends OpGroup {
     * PqIndexSpec snapshots before asserting the append leaves it
     * untouched).
     */
-  private[graft] def pqAppendBase(s: SparkSession, sf: String): String = {
-    val dir = pqAppendDir(s, sf)
-    val parts = Seq("coarse", "codebook", "codes")
-    if (!parts.forall(p => new java.io.File(s"$dir/$p", "_SUCCESS").exists())) {
-      val (coarse, sub, cb) = pqModel(s, sf)
-      coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-      cb.write.mode("overwrite").parquet(s"$dir/codebook")
-      pqNearest(sub, cb)
-        .filter(pmod(col("vec_id"), lit(2)) === 0)
-        .select(col("vec_id"), col("ccid"), col("m"), col("cid"))
-        .write.mode("overwrite").partitionBy("ccid").parquet(s"$dir/codes")
-    }
-    dir
-  }
+  private[graft] def pqAppendBase(s: SparkSession, sf: String): String =
+    pqBase(s, sf, pqAppendDir(s, sf), pmod(col("vec_id"), lit(2)) === 0)
 
   private[graft] def pqAppendedIndex(s: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val dir = pqAppendBase(s, sf)
-    // CRASH-SAFE COMMIT (r14, the r13 verdict's item 1 + r13 ADVICE):
-    // the r13 formulation mode("append")ed codes into the live ccid=…
-    // dirs and then dropped an _APPENDED marker — a crash between the
-    // two let a retry re-append, and duplicated (vec_id,ccid,m,cid)
-    // rows double adc_d2 in the probe's sum aggregate, corrupting the
-    // ranking. Now the ingest generation stages whole and commits via
-    // ONE atomic rename ([[Tables.commitStaged]]); the base codes are
-    // never written after generation 0 (PqIndexSpec's crash-retry
-    // negative test pins exactly-once membership).
-    // MULTI-GENERATION ingest (r14, the LSH twin's shape): the odd half
-    // arrives as two daily batches (gen g encodes doc vec_id % 4 ==
-    // 2g − 1), each encode-only against the frozen persisted model and
-    // each committed by its own atomic rename. Membership converges to
-    // all vectors, so probe ≡ reload holds per generation count.
+    // Each ingest generation stages whole and commits by ONE atomic
+    // rename ([[Tables.commitStaged]]), and the base codes are never
+    // written after generation 0: a crash can never leave duplicated
+    // (vec_id, ccid, m, cid) rows, which would double adc_d2 in the
+    // probe's sum and corrupt the ranking (PqIndexSpec's crash-retry
+    // test pins exactly-once membership). The odd half arrives as two
+    // daily batches (gen g encodes vec_id % 4 == 2g − 1), each
+    // encode-only against the frozen persisted model. Membership
+    // converges to all vectors, so probe ≡ reload holds.
     for (g <- 1 to PqIngestGens)
       Tables.commitStaged(dir, s"gen$g") { tmp =>
         // Encode the ingest batch with the PERSISTED model — the frozen
@@ -809,14 +794,10 @@ object Vectors extends OpGroup {
   private[graft] val PqIngestGens = 2
 
   /** The append-grown codes relation: generation 0 ∪ every committed
-    * ingest generation, each read from its own root so ccid partition
-    * discovery applies per branch.
+    * ingest generation.
     */
   private[graft] def pqAppendedCodes(s: SparkSession, dir: String): DataFrame =
-    (0 to PqIngestGens).map {
-      case 0 => Tables.parquet(s, s"$dir/codes")
-      case g => Tables.parquet(s, s"$dir/gen$g/codes")
-    }.reduce(_.unionByName(_))
+    Tables.generationPart(s, Tables.generationRoots(dir), "codes")
 
   /** The keyed op: serve `vec_pq_adc_probe`'s nprobe=4 query path from
     * the append-grown index. No oracle (trained quantizer); PqIndexSpec
@@ -900,16 +881,6 @@ object Vectors extends OpGroup {
     (Tables.parquet(s, s"$dir/coarse"),
       Tables.parquet(s, s"$dir/codebook"),
       Tables.parquet(s, s"$dir/compact/codes"))
-  }
-
-  /** VACUUM (r14) — retire the generation CODE dirs once compaction is
-    * committed (the LSH twin's fifth act; model artifacts stay).
-    */
-  private[graft] def pqVacuumGenerations(dir: String): Unit = {
-    require(new java.io.File(dir, "compact").exists(),
-      s"refusing to vacuum $dir: no committed compaction — generations are still the only copy")
-    (Seq("codes") ++ (1 to PqIngestGens).map(g => s"gen$g"))
-      .foreach(p => Tables.rmTree(new java.io.File(dir, p)))
   }
 
   /** The keyed op: compact the append-grown index, then serve the
@@ -1146,39 +1117,33 @@ object Vectors extends OpGroup {
   )
 
   /** Fingerprint-keyed home of the persisted semantic-cluster
-    * assignment (r14) — the component-maintenance dual of the r13
-    * index-append lineages.
+    * assignment — the component-maintenance dual of the index-append
+    * lineages.
     */
   private[graft] def semCcDir(s: SparkSession, sf: String): String =
-    Tables.cachedDir(
-      Tables.tmp("graft_semcc_app"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "embeddings"))
+    Tables.artifactDir("graft_semcc_app", sf, "embeddings")
 
   /** Generation 0: the semantic-cluster assignment over the even-parity
     * base corpus — SRP candidates restricted to the base (band keys
     * depend only on each vector, so base-subset candidates = all-corpus
     * candidates with both sides even), exact-cosine verify at 0.4, CC,
-    * persisted once ( _SUCCESS-gated like the index bases).
+    * persisted once, each part by its own staged commit.
     */
   private[graft] def semClustersBase(s: SparkSession, sf: String): String = {
     val dir = semCcDir(s, sf)
-    if (!(new java.io.File(s"$dir/assign", "_SUCCESS").exists() &&
-        new java.io.File(s"$dir/keys", "_SUCCESS").exists())) {
-      val even = normed(s, sf).filter(pmod(col("vec_id"), lit(2)) === 0)
-      // Persist the base SRP keys alongside the assignment (r14 bench
-      // finding): the append must compute projections for the BATCH
-      // only — recomputing the base side's 16×64-dim decimal dots each
-      // ingest made the "incremental" op cost more than the full
-      // recompute at fixture scale.
-      srpKeysOf(s, even).write.mode("overwrite").parquet(s"$dir/keys")
-      val edges = cosineOfPairsOf(even,
-          srpCandidatesFromKeys(Tables.parquet(s, s"$dir/keys")))
+    lazy val even = normed(s, sf).filter(pmod(col("vec_id"), lit(2)) === 0)
+    // The base SRP keys persist beside the assignment: the append must
+    // compute projections for the BATCH only — recomputing the base
+    // side's 16×64-dim decimal dots each ingest made the "incremental"
+    // op cost more than the full recompute at fixture scale.
+    val keys = Tables.commitStaged(dir, "keys")(srpKeysOf(s, even).write.parquet(_))
+    Tables.commitStaged(dir, "assign") { tmp =>
+      val edges = cosineOfPairsOf(even, srpCandidatesFromKeys(Tables.parquet(s, keys)))
         .filter(col("sim") >= 0.4)
         .select(col("a_vec_id").as("u"), col("b_vec_id").as("v"))
       Clusters.connectedComponents(even.select(col("vec_id").as("node")), edges,
         "semcc_base@" + sf)
-        .write.mode("overwrite").parquet(s"$dir/assign")
+        .write.parquet(tmp)
     }
     dir
   }

@@ -76,8 +76,8 @@ class LshCompactSpec extends SparkSpec {
     // generation dirs are redundant and retire; the compacted index
     // keeps serving the same answer from its own files alone.
     val uncompacted = java.nio.file.Files.createTempDirectory("graft_no_compact").toString
-    assertThrows[IllegalArgumentException](ops.Dedup.lshVacuumGenerations(uncompacted))
-    ops.Dedup.lshVacuumGenerations(dir)
+    assertThrows[IllegalArgumentException](Tables.vacuumGenerations(uncompacted, ops.Dedup.LshParts))
+    Tables.vacuumGenerations(dir, ops.Dedup.LshParts)
     for (p <- Seq("bands", "masks", "vocab", "gen1"))
       assert(!new java.io.File(dir, p).exists(), s"vacuum left generation dir $p")
     val served = SparkEntry.queries("dedup_minhash_index_compact")(spark, sf)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 /** The per-corpus memo (ResultPins.memo) is keyed by the fingerprint of
   * the tables each build reads: a fixture regenerated inside a live
   * session must retrain, not serve (or persist under the new
-  * fingerprint's index dir) the previous corpus's model.
+  * fingerprint's index dir) the previous corpus's model, and must not
+  * keep holding the previous model's checkpoints either.
   */
 class MemoFingerprintSpec extends SparkSpec {
 
@@ -21,6 +22,7 @@ class MemoFingerprintSpec extends SparkSpec {
     try {
       copy(new java.io.File(sf), root)
       val trained = vecIds(SparkEntry.queries("vec_pq_codes")(spark, dir))
+      val held = spark.sparkContext.getPersistentRDDs.size
 
       // Regenerate the fixture: keep the even vec_ids only.
       val emb = s"$dir/embeddings.parquet"
@@ -38,6 +40,10 @@ class MemoFingerprintSpec extends SparkSpec {
         "the PQ model memo served the previous corpus after embeddings.parquet was rewritten")
       assert(codes == regenerated,
         s"vec_pq_codes covers ${codes.size} vec_ids, the rewritten file has ${regenerated.size}")
+      // The superseded corpus's model is released, not kept beside the new one.
+      assert(spark.sparkContext.getPersistentRDDs.size <= held,
+        s"persistent RDDs went $held -> ${spark.sparkContext.getPersistentRDDs.size}: " +
+          "the old corpus's model checkpoints are still held")
       val (_, _, persisted) = ops.Vectors.pqPersistedModel(spark, dir)
       assert(vecIds(persisted) == regenerated,
         "the persisted index holds codes of the previous corpus")

@@ -42,10 +42,7 @@ class PartitionedScanSpec extends SparkSpec {
 
   test("compaction rewrites the 30-file layout into the size-targeted file count") {
     SparkEntry.queries("etl_compact_small_files")(spark, sf).collect(): Unit
-    val dir = Tables.cachedDir(
-      Tables.tmp("graft_compact"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "events")) + "/events"
+    val dir = Tables.artifactDir("graft_compact", sf, "events") + "/events"
     val srcBytes = Tables.dirBytes(new java.io.File(ops.Scans.partitionedEventsDir(spark, sf)))
     val expected = math.max(1L, (srcBytes + (64L << 20) - 1) / (64L << 20)).toInt
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -102,10 +99,7 @@ class PartitionedScanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // Materialize the layout (op is idempotent via its fingerprint cache).
     SparkEntry.queries("etl_zorder_layout")(spark, sf).collect()
-    val dir = Tables.cachedDir(
-      Tables.tmp("graft_zorder"),
-      sf.replaceAll("[^a-zA-Z0-9.]", "_"),
-      Tables.fingerprint(sf, "events")) + "/events"
+    val dir = Tables.artifactDir("graft_zorder", sf, "events") + "/events"
     val files = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .map(_.getPath)

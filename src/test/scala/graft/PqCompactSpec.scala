@@ -73,8 +73,8 @@ class PqCompactSpec extends SparkSpec {
     // compaction is committed; the model relations + compacted codes
     // keep serving the identical probe.
     val uncompacted = java.nio.file.Files.createTempDirectory("graft_no_compact_pq").toString
-    assertThrows[IllegalArgumentException](ops.Vectors.pqVacuumGenerations(uncompacted))
-    ops.Vectors.pqVacuumGenerations(dir)
+    assertThrows[IllegalArgumentException](Tables.vacuumGenerations(uncompacted, Seq("codes")))
+    Tables.vacuumGenerations(dir, Seq("codes"))
     for (p <- Seq("codes", "gen1"))
       assert(!new java.io.File(dir, p).exists(), s"vacuum left generation dir $p")
     val served = SparkEntry.queries("vec_pq_index_compact")(spark, sf).collect().toSet

@@ -36,6 +36,41 @@ class PqIndexSpec extends SparkSpec {
     assert(r2 == r1, "cold-reload probe diverged from the warm result")
   }
 
+  test("a base whose codes part was lost restages codes alone, without retraining") {
+    import org.apache.spark.sql.functions.col
+    val (_, _, codes0) = ops.Vectors.pqPersistedModel(spark, sf) // a live base
+    val dir = ops.Vectors.pqIndexDir(spark, sf)
+    ops.Vectors.pqModel(spark, sf) // the in-session model the restage encodes with
+    def digests(part: String): Map[String, String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(dir, part)).map { f =>
+        f.getPath -> java.security.MessageDigest.getInstance("MD5")
+          .digest(java.nio.file.Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+      }.toMap
+    }
+    val model = Seq("coarse", "codebook").map(p => p -> digests(p)).toMap
+    val want = codes0.collect().toSet
+
+    // Crash between parts: `codes` never committed, and an attempt left
+    // a poisoned staging (every code shifted) behind.
+    val staging = new java.io.File(dir, ".codes.staging")
+    codes0.withColumn("cid", col("cid") + 1)
+      .write.partitionBy("ccid").parquet(staging.getPath)
+    Tables.rmTree(new java.io.File(dir, "codes"))
+
+    val trainsBefore = ops.Vectors.pqTrainCounter.get()
+    val (_, _, codes) = ops.Vectors.pqPersistedModel(spark, sf)
+    assert(ops.Vectors.pqTrainCounter.get() == trainsBefore,
+      "restaging the codes part re-entered the training loop")
+    assert(!staging.exists(), "the poisoned staging survived the restage")
+    assert(codes.collect().toSet == want, "the restaged codes differ from the lost ones")
+    model.foreach { case (p, files) =>
+      assert(digests(p) == files, s"restaging codes rewrote the committed $p part")
+    }
+  }
+
   test("reload probe scans the codes relation with cell-directory pruning (r12)") {
     // The codes relation is the only corpus-scale artifact; it is
     // persisted partitionBy(ccid), so the nprobe-pruned search must

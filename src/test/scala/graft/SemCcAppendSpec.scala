@@ -42,7 +42,7 @@ class SemCcAppendSpec extends SparkSpec {
       "every node entered the CC merge — work is not O(batch-adjacent)")
 
     // Warm serve: the persisted generation-0 assignment answers without
-    // a rebuild (dir still _SUCCESS-gated), and the answer is stable.
+    // a rebuild (its parts are committed), and the answer is stable.
     val again = SparkEntry.queries("dedup_semantic_clusters_append")(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(again == inc, "re-invocation changed the merged assignment")

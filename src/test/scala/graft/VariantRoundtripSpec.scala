@@ -28,7 +28,7 @@ class VariantRoundtripSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(rt == dec, "reloaded variant aggregate diverged from the in-flight decode")
 
-    // Warm serve: the _SUCCESS-gated artifact answers without a rewrite.
+    // Warm serve: the committed artifact answers without a rewrite.
     val mtimes = Option(new java.io.File(ops.Scalars.variantDir(spark, sf)).listFiles())
       .getOrElse(Array.empty).map(f => f.getName -> f.lastModified()).toMap
     val again = SparkEntry.queries("json_variant_roundtrip")(spark, sf)

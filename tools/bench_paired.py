@@ -12,7 +12,7 @@ in-process here with its own warm pass, min-of-2 per key. Spark-only
 Usage: python3 tools/bench_paired.py [sfDir] [oracle_sql.json] [threads] [out.json]
 Builder-side tool only (the round driver runs graft.Bench unchanged).
 """
-import sys, os, glob, json, time, subprocess
+import sys, os, re, glob, json, time, subprocess
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ORACLE = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out/oracle_sql.json"
@@ -21,26 +21,24 @@ OUT = sys.argv[4] if len(sys.argv) > 4 else "artifacts/bench_paired.json"
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Same JDK17 module opens + heap as build.sbt's javaOptions (SparkSession
-# outside spark-submit needs them).
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
-cmd = ["java"]
-for p in ADD_OPENS:
-    cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
-cmd += [
-    f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '48g')}",
-    "-Dspark.ui.enabled=false",
-    "-cp", f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*",
-    "graft.BenchServer",
-]
+def jvm_flags():
+    """The JVM flags in jvm.options, the list build.sbt's javaOptions also
+    reads: one flag per line, `${VAR:-default}` from the environment."""
+    flags = []
+    with open(os.path.join(REPO, "jvm.options")) as f:
+        for line in f:
+            line = line.strip()
+            if line and not line.startswith("#"):
+                line = re.sub(r"\$\{(\w+):-([^}]*)\}",
+                              lambda m: os.environ.get(m.group(1), m.group(2)), line)
+                flags += line.split()
+    return flags
+
+cmd = ["java", *jvm_flags(),
+       "-cp", f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*",
+       "graft.BenchServer"]
+print("server:", " ".join(cmd), flush=True)
+
 env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF, SPARK_GRAFT_CPUS=THREADS)
 log = open("/tmp/bench_server.log", "w")
 proc = subprocess.Popen(cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
