@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 object Bench {
   /** Shared bench environment: tmpfs scratch, the session, and the two
     * warm passes — used by both the one-shot sweep ([[main]]) and the
@@ -20,7 +20,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     var warmFails = 0
     def warm(dir: String): Unit = SparkEntry.queries.foreach { case (name, fn) =>
-      try { fn(spark, dir).count(); () }
+      try consume(fn(spark, dir))
       catch { case t: Throwable =>
         warmFails += 1
         System.err.println(s"warmup($dir) FAILED $name: ${t.getClass.getSimpleName}")
@@ -35,6 +35,15 @@ object Bench {
     (spark, sfDir, warmFails)
   }
 
+  /** Runs `df`'s whole plan, its final sort included, and reads every row
+    * and column of the result on the executors: what a client fetching
+    * the result pays for, as DuckDB's `fetchall()` does on the other side
+    * of tools/bench_paired.py. `count()` would let Catalyst drop the sort
+    * and every column it does not need.
+    */
+  private[graft] def consume(df: DataFrame): Unit =
+    df.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
+
   /** Min-of-2 timing of one key (crash = loud failure, never a time):
     * the one timing path of Bench, BenchServer and the probe CLI. The
     * minimum of two back-to-back reps bounds a one-off host/GC spike.
@@ -46,7 +55,7 @@ object Bench {
     def rep(): (Double, Option[String]) = {
       System.gc()
       val t0 = System.nanoTime()
-      val err = try { fn(spark, sfDir).count(); None }
+      val err = try { consume(fn(spark, sfDir)); None }
                 catch { case t: Throwable => Some(t.getClass.getSimpleName) }
       ((System.nanoTime() - t0) / 1e9, err)
     }

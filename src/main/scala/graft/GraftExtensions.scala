@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RebalancePartitions, Repartition, RepartitionOperation, Sort}
+import org.apache.spark.sql.catalyst.optimizer.RewriteDistinctAggregates
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan, Project, RebalancePartitions, Repartition, RepartitionOperation, SHUFFLE_HASH, Sort, Subquery, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.functions.{ExplodeDnf, FloatVecDot, MaskIntersect, SimHash60, VecTopK}
 
 /** Session-extension entry point: registers the engine's custom Catalyst
-  * expressions and the [[GatherSmallSort]] optimizer rule at session
+  * expressions and the [[GatherSmallPlan]] optimizer rule at session
   * build time —
   *
   * {{{
@@ -67,33 +69,85 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ExplodeDnf(children.head)
       },
     ))
-    ext.injectOptimizerRule(_ => GatherSmallSort)
+    ext.injectPreCBORule(_ => GatherSmallPlan)
   }
 }
 
-/** Plans a global sort over a small input on one partition. A global sort
-  * is planned as a range exchange, whose partitioner first runs a sampling
-  * job; on the tiny aggregates that most queries end with, that job and
-  * the exchange's map stage are most of the sort's cost. When the sort's
-  * input is estimated at or under `spark.sql.autoBroadcastJoinThreshold`
-  * (the same "small enough for one task" bound a broadcast uses, and `-1`
-  * turns this off too), the rule puts a shuffle-free coalesce to one
-  * partition under the sort: its single partition already satisfies the
-  * sort's ordered distribution, so no exchange and no sampling job run.
-  * Plans keep their sort as it is when they are streaming, when the input
-  * has no size estimate (a pinned result) or a large one (a join's is the
-  * product of its sides; any 100 TB input), or when the input repartitions
-  * itself, as a coalesce would collapse the parallelism it asked for.
+/** Runs a small batch plan as one stage. When a plan's leaves together
+  * are estimated at or under `spark.sql.autoBroadcastJoinThreshold` (the
+  * bound under which a broadcast ships a whole relation to one task;
+  * `-1` turns this rule off, as it does broadcasts), it
+  *
+  *  - puts a shuffle-free coalesce to one partition above each scan's
+  *    Project/Filter chain, and above each Union and Expand, whose output
+  *    would otherwise span several partitions (the Expand that several
+  *    distinct aggregates plan into is written out here, ahead of the
+  *    optimizer's own later rewrite, so it is gathered too). A single
+  *    partition satisfies every clustered, ordered and all-tuples
+  *    distribution, so aggregates, windows and sorts above it plan no
+  *    hash or range exchange, and a sort runs no sampling job;
+  *  - plans each equi-join that carries no hint as a shuffled-hash join
+  *    (a `SHUFFLE_HASH` hint on both sides). With both sides on one
+  *    partition the join needs no exchange; left alone, the planner would
+  *    broadcast the smaller side, and that broadcast is a job of its own.
+  *
+  * The plan is left as it is when it is streaming, when it asks for its
+  * own parallelism (a shuffling repartition or a rebalance), when a leaf
+  * has no size estimate or a large one (every 100 TB scan), or when it
+  * holds a nondeterministic expression, whose values depend on the
+  * partition layout it runs on.
+  *
+  * Otherwise the rule still gathers each global sort whose input alone is
+  * estimated under the bound and does not repartition itself, so a large
+  * plan that ends in a small aggregate sorts it without a range exchange
+  * and its sampling job.
   */
-object GatherSmallSort extends Rule[LogicalPlan] {
+object GatherSmallPlan extends Rule[LogicalPlan] {
+  private val shuffleHash = JoinHint(Some(HintInfo(Some(SHUFFLE_HASH))), Some(HintInfo(Some(SHUFFLE_HASH))))
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val limit = conf.autoBroadcastJoinThreshold
     if (limit < 0 || plan.isStreaming) plan
+    else if (!plan.exists(spreads) && plan.collectLeaves().map(_.stats.sizeInBytes).sum <= limit &&
+        !plan.exists(_.expressions.exists(!_.deterministic))) root(RewriteDistinctAggregates(plan))
     else plan.transformUp {
       case s @ Sort(_, true, child, _)
           if !gathered(child) && !child.exists(spreads) && child.stats.sizeInBytes <= limit =>
         s.copy(child = Repartition(1, shuffle = false, child))
     }
+  }
+
+  /** The root keeps its shape: a bare scan needs no gather, and callers
+    * that optimize a one-row Project (parameter binding, one-row
+    * subqueries) expect one back.
+    */
+  private def root(p: LogicalPlan): LogicalPlan = p match {
+    case s: Subquery => s.copy(child = root(s.child))
+    case _ => within(p)
+  }
+
+  /** `p` with every scan chain, Union and Expand below or at it gathered
+    * and its unhinted equi-joins planned shuffled-hash.
+    */
+  private def gather(p: LogicalPlan): LogicalPlan = within(p) match {
+    case q @ (_: Union | _: Expand) => Repartition(1, shuffle = false, q)
+    case q if scan(q) => Repartition(1, shuffle = false, q)
+    case q => q
+  }
+
+  private def within(p: LogicalPlan): LogicalPlan = p match {
+    case _ if scan(p) => p
+    case r @ Repartition(1, false, child) => r.copy(child = within(child))
+    case j: Join if j.hint == JoinHint.NONE && ExtractEquiJoinKeys.unapply(j).isDefined =>
+      j.copy(left = gather(j.left), right = gather(j.right), hint = shuffleHash)
+    case _ => p.mapChildren(gather)
+  }
+
+  private def scan(p: LogicalPlan): Boolean = p match {
+    case _: LeafNode => true
+    case Project(_, child) => scan(child)
+    case Filter(_, child) => scan(child)
+    case _ => false
   }
 
   private def gathered(p: LogicalPlan): Boolean = p match {
@@ -110,7 +164,7 @@ object GatherSmallSort extends Rule[LogicalPlan] {
 
 object GraftExtensions {
   /** Clean analysis-time arity error instead of the builder's
-    * IndexOutOfBoundsException on a wrong-arg-count call (r3 advice).
+    * IndexOutOfBoundsException on a wrong-arg-count call.
     */
   def checkArity(fn: String, sig: String, n: Int, children: Seq[Expression]): Unit =
     if (children.length != n)

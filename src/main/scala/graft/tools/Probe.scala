@@ -75,7 +75,7 @@ object Probe {
   }
 
   private def warm(spark: SparkSession, sf: String, key: String): Unit =
-    try SparkEntry.queries(key)(spark, sf).count(): Unit
+    try Bench.consume(SparkEntry.queries(key)(spark, sf))
     catch { case t: Throwable => println(s"[probe] warm $key FAILED: $t") }
 
   private def median(xs: Seq[Double]): Double = {
@@ -112,7 +112,7 @@ object Probe {
     warm(spark, sf, key)
     val (wall, js) = withJobLog(spark) { log =>
       val t0 = System.nanoTime()
-      fn(spark, sf).count()
+      Bench.consume(fn(spark, sf))
       ((System.nanoTime() - t0) / 1e9, log)
     }
     val rows = js.done.asScala.toSeq.sortBy(_._1)

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Plan-shape assertions for the r9-verdict weak-plan fixes: each of
-  * these operators was CORRECT but carried a plan that would not survive
-  * a 100× scale-up (double fact scan, unbounded broadcast, fact-sized
-  * window sort). The oracle gate proves the values; these tests pin the
-  * SHAPE so a refactor can't silently regress the scale property.
+/** Plan-shape assertions. Each of these operators once returned CORRECT
+  * values through a plan that would not survive a 100× scale-up (double
+  * fact scan, unbounded broadcast, fact-sized window sort), and small
+  * plans under GraftExtensions must run as one stage. The oracle gate
+  * proves the values; these tests pin the SHAPE so a refactor can't
+  * silently regress the scale property or the small-plan floor.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -138,29 +139,78 @@ class PlanShapeSpec extends SparkSpec {
       s"expected the price window input to be pruned by a bucket join:\n$plan")
   }
 
-  /** Run `f` in a session built with GraftExtensions on the shared
-    * SparkContext, the deployment path every main uses.
+  private def rangeSorts(plan: String): Boolean = plan.contains("rangepartitioning")
+
+  /** Any hash, range, single-partition or broadcast exchange, or an AQE
+    * stage standing for one (the final plan's result stage is not one).
     */
-  private def withGraftSession(f: org.apache.spark.sql.SparkSession => Unit): Unit = {
-    val orig = spark // force-create the shared session first
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val ext = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new GraftExtensions)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      ext.conf.set("spark.sql.shuffle.partitions", "4")
-      ext.conf.set("spark.sql.session.timeZone", "UTC")
-      f(ext)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(orig)
-      org.apache.spark.sql.SparkSession.setDefaultSession(orig)
+  private def exchanges(plan: String): Boolean =
+    Seq("Exchange", "ShuffleQueryStage", "BroadcastQueryStage").exists(plan.contains)
+
+  private def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("small plans run with no exchange and return the plain session's rows") {
+    withGraftSession { ext =>
+      for (key <- PlanShapeSpec.panel :+ "agg_group_summary") {
+        val df = SparkEntry.queries(key)(ext, sf)
+        val plan = finalPlan(df)
+        assert(!exchanges(plan), s"$key still plans an exchange:\n$plan")
+        assert(multiset(df) == multiset(SparkEntry.queries(key)(spark, sf)),
+          s"$key: the gathered plan changed the result")
+      }
     }
   }
 
-  private def rangeSorts(plan: String): Boolean = plan.contains("rangepartitioning")
+  private def ordersByNation(s: org.apache.spark.sql.SparkSession, hint: Boolean) = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val c = Tables.parquet(s, s"$sf/customer.parquet")
+    Tables.parquet(s, s"$sf/orders.parquet")
+      .join(if (hint) broadcast(c) else c, col("o_custkey") === col("c_custkey"))
+      .groupBy("c_nationkey").count()
+  }
+
+  test("a small join plans shuffled-hash with no broadcast, and a broadcast() hint survives") {
+    withGraftSession { ext =>
+      val plan = finalPlan(ordersByNation(ext, hint = false))
+      assert(plan.contains("ShuffledHashJoin") && !exchanges(plan),
+        s"the small join is not a single-stage shuffled-hash join:\n$plan")
+      val hinted = finalPlan(ordersByNation(ext, hint = true))
+      assert(hinted.contains("BroadcastHashJoin") && hinted.contains("BroadcastExchange"),
+        s"the user's broadcast hint was overridden:\n$hinted")
+      assert(multiset(ordersByNation(ext, hint = false)) == multiset(ordersByNation(spark, hint = false)))
+    }
+  }
+
+  test("a huge, a self-repartitioned or a threshold -1 join keeps its exchanges") {
+    withGraftSession { ext =>
+      import org.apache.spark.sql.functions.col
+      // 2^40 rows: the 100 TB regime. Planned only, never run.
+      val orders = Tables.parquet(ext, s"$sf/orders.parquet")
+      val huge = ext.range(0, 1L << 40).join(orders, col("id") === col("o_orderkey"))
+        .groupBy("o_custkey").count().queryExecution.executedPlan.toString
+      assert(exchanges(huge) && !huge.contains("Coalesce 1") && !huge.contains("ShuffledHashJoin"),
+        s"a 2^40-row join was gathered:\n$huge")
+      // A plan that sets its own parallelism keeps it.
+      val c = Tables.parquet(ext, s"$sf/customer.parquet")
+      val spread = finalPlan(orders.repartition(8).join(c, col("o_custkey") === col("c_custkey"))
+        .groupBy("c_nationkey").count())
+      assert(!spread.contains("Coalesce 1") && !spread.contains("ShuffledHashJoin") &&
+        (spread.contains("BroadcastExchange") || spread.contains("hashpartitioning")),
+        s"a repartitioned input was gathered:\n$spread")
+      // -1 turns the gather off, as it does broadcast joins.
+      ext.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val off = finalPlan(ordersByNation(ext, hint = false))
+        assert(off.contains("hashpartitioning") && !off.contains("Coalesce 1"),
+          s"threshold -1 still gathered the join:\n$off")
+        for (key <- Seq("sql_tpch_q6", "stats_cramers_v")) {
+          val plan = finalPlan(SparkEntry.queries(key)(ext, sf))
+          assert(exchanges(plan) && !plan.contains("Coalesce 1"), s"threshold -1 still gathered $key:\n$plan")
+        }
+      } finally ext.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
 
   test("a small final orderBy is gathered onto one partition, with no range exchange") {
     withGraftSession { ext =>
@@ -202,7 +252,13 @@ class PlanShapeSpec extends SparkSpec {
         LocalRelation(Seq(x), Nil, isStreaming = streaming))
     def gathered(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       p.exists { case Repartition(1, false, _) => true; case _ => false }
-    assert(gathered(GatherSmallSort(sortOver(streaming = false))))
-    assert(!gathered(GatherSmallSort(sortOver(streaming = true))))
+    assert(gathered(GatherSmallPlan(sortOver(streaming = false))))
+    assert(!gathered(GatherSmallPlan(sortOver(streaming = true))))
   }
+}
+
+object PlanShapeSpec {
+  /** The seven keys of the benchmark's interactive panel. */
+  val panel: Seq[String] = Seq("sql_tpch_q6", "math_try_safe", "win_dedup_rank", "agg_mode_per_group",
+    "stats_cramers_v", "join_skew_salted", "stats_theilsen_slope")
 }

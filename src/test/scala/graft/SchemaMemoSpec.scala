@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** `Tables.parquet` remembers inferred parquet schemas: a repeat read runs
@@ -15,30 +12,6 @@ class SchemaMemoSpec extends SparkSpec {
     val d = Tables.tmp(s"graft_schema_memo_spec/$tag")
     Tables.rmTree(new java.io.File(d))
     d
-  }
-
-  /** Spark jobs started while `body` runs. Listener delivery is async and
-    * ordered, so a marker job run afterwards flushes the body's events.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val marker = "schema-memo-spec-marker"
-    val jobs = new AtomicInteger(0)
-    val seenMarker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
-          seenMarker.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(seenMarker.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a repeat read of a fixture runs no Spark job and keeps the inferred schema") {
