@@ -1,19 +1,22 @@
 package graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftFrames, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one owner of session-held relations: which materialized relations
   * stay in the block manager, and when they are freed. Three kinds:
   *
-  *  - RESULT pins ([[swap]], [[swapCheckpoint]]), one per op key. Ops
-  *    pin their final result to truncate the logical plan before the
-  *    output sort. Registering a pin under its key SWAPS OUT the previous
-  *    invocation's pin (non-blocking unpersist), so the block manager
-  *    holds at most ONE result pin per (op, corpus): a long-lived session
-  *    (a bench sweep, a notebook) stays flat instead of gaining one
-  *    pinned RDD per invocation (ResultPinsSpec). [[release]] frees one
-  *    key, [[releaseAll]] every pin.
+  *  - RESULT pins ([[swap]]), one per op key. Ops pin their final result
+  *    to truncate the logical plan before the output sort. Registering a
+  *    pin under its key SWAPS OUT the previous invocation's pin
+  *    (non-blocking unpersist), so the block manager holds at most ONE
+  *    result pin per (op, corpus): a long-lived session (a bench sweep, a
+  *    notebook) stays flat instead of gaining one pinned RDD per
+  *    invocation (ResultPinsSpec). [[release]] frees one key,
+  *    [[releaseAll]] every pin.
   *  - Per-corpus MEMOS ([[memo]]): a trained model or a shared graph,
   *    built once per (session, sfDir, kind, input fingerprint) and kept
   *    until [[forget]] drops its kind or a rewritten input supersedes
@@ -22,17 +25,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
   *  - SCOPED intermediates ([[scoped]]): pinned for one op's body and
   *    freed when it exits, also on exception.
   *
-  * A [[swap]]-pinned DataFrame stays CORRECT if a caller still holds it
-  * after being swapped out (the RDD lineage recomputes on demand); only
-  * its cached blocks are released. A [[swapCheckpoint]]-pinned DataFrame
-  * does NOT: localCheckpoint TRUNCATES lineage, so releasing the
-  * superseded checkpoint's blocks leaves the old DataFrame
-  * unrecomputable (missing-block errors on next action). Callers must
-  * treat a swapCheckpoint result as valid only until the same key is
-  * swapped again, i.e. not consume a prior invocation's pinned relation
-  * (or anything derived lazily from it, like the append ops' witness
-  * seams) after re-invoking the op. The same holds for a memo after
-  * [[forget]].
+  * Pins and scoped intermediates share one mechanism ([[materialize]]),
+  * which keeps the lineage: a frame still held after its pin was swapped
+  * out or its scope exited recomputes on demand; only its cached blocks
+  * are gone. Memo builds checkpoint locally, which truncates lineage, so
+  * a memo's relations are valid only until [[forget]] drops them or a
+  * rewritten input supersedes them.
   */
 object ResultPins {
   /** Every registered result pin: key -> the RDDs whose blocks it holds. */
@@ -43,15 +41,17 @@ object ResultPins {
     if (old != null) old.filterNot(held.contains).foreach(_.unpersist(false))
   }
 
-  /** Persist `df`'s rows and count them: the rewrapped DataFrame's plan
-    * starts at the persisted RDD, so later plans over it neither
-    * recompute nor re-analyze the lineage.
+  /** Persist `df`'s InternalRows (at `localCheckpoint`'s storage level,
+    * with no Row decode or re-encode) and count them once. The returned
+    * frame's plan starts at the persisted RDD, so later plans over it
+    * neither recompute nor re-analyze the lineage, and its leaf reports
+    * the exact row count and a size from it: sorts and joins over a
+    * small pin plan as over any small relation ([[GatherSmallPlan]]).
     */
-  private def materialize(s: SparkSession, df: DataFrame): (DataFrame, RDD[Row], Long) = {
-    val rdd = df.rdd
-    rdd.persist()
+  private def materialize(s: SparkSession, df: DataFrame): (DataFrame, RDD[InternalRow], Long) = {
+    val rdd = df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     val n = rdd.count()
-    (s.createDataFrame(rdd, df.schema), rdd, n)
+    (GraftFrames.ofRows(s, df.schema, rdd, n), rdd, n)
   }
 
   /** Materialize and pin `df`'s rows, replacing (and freeing) the
@@ -68,25 +68,15 @@ object ResultPins {
     out
   }
 
-  /** [[swap]] for LARGE relations: pin via `localCheckpoint` (eager),
-    * which caches InternalRow blocks: no per-row Row decode on
-    * materialization and no re-serialization when downstream plans scan
-    * the pin (the same 1M-row cc-append pipeline cost 23 s through
-    * `df.rdd` + Row conversion vs ~6 s checkpointed). The superseded
-    * checkpoint's blocks are released AND its lineage is already
-    * truncated, so the swapped-out DataFrame is INVALIDATED, not merely
-    * evicted; see the object doc.
+  /** The row count a pin took while materializing `pinned` (a frame
+    * [[swap]] returned), read from its leaf: no job.
     */
-  def swapCheckpoint(key: String, df: DataFrame): DataFrame = {
-    capturePlan(key, df)
-    val ck = df.localCheckpoint()
-    register(key, checkpointRdds(ck))
-    ck
-  }
+  def rowCount(pinned: DataFrame): Long =
+    pinned.queryExecution.analyzed.stats.rowCount.get.toLong
 
   private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case l: LogicalRDD => l.rdd
     }
 
   /** Free the block-manager storage behind a localCheckpointed DataFrame
@@ -200,7 +190,7 @@ object ResultPins {
     * with [[swap]] inside the body.
     */
   def scoped[T](s: SparkSession)(body: (DataFrame => (DataFrame, Long)) => T): T = {
-    var held = List.empty[RDD[Row]]
+    var held = List.empty[RDD[InternalRow]]
     try body { df =>
       val (out, rdd, n) = materialize(s, df)
       held ::= rdd

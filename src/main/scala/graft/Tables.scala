@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, GraftFrames, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Readers for the driver corpus (TESTDATA.md / FIXTURES.md): one parquet
   * file per table under `sfDir`. Plain DSv2 parquet scans — column pruning
@@ -141,6 +143,33 @@ object Tables {
     */
   def spread(s: SparkSession, df: DataFrame): DataFrame =
     df.repartition(s.sparkContext.defaultParallelism)
+
+  /** `df` plus a LONG column `name` that numbers its rows from `offset`
+    * in the order of `order`, with no single-partition stage:
+    * range-partitioning and a partition-local sort put the rows in one
+    * global order across partitions, one job counts each partition (only
+    * the counts leave the executors), and each partition numbers its rows
+    * from the sum of the preceding partitions' counts. The total is the
+    * frame's row count ([[GraftFrames.ofRows]]). `order` must be total: a
+    * relation read twice (both sides of a join) or recomputed on a stage
+    * retry must number every row the same, and a plain `distinct()`
+    * leaves its within-partition order to shuffle fetch order.
+    */
+  def numbered(df: DataFrame, name: String, offset: Long, order: Column*): DataFrame = {
+    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+    val rows = sorted.queryExecution.toRdd
+    val counts = rows.mapPartitions(it => Iterator(it.size.toLong)).collect()
+    val starts = counts.scanLeft(offset)(_ + _)
+    val schema = sorted.schema.add(name, LongType)
+    val ids = rows.mapPartitionsWithIndex { (p, it) =>
+      val project = UnsafeProjection.create(schema)
+      val joined = new JoinedRow
+      val id = new SpecificInternalRow(Seq(LongType))
+      var next = starts(p)
+      it.map[InternalRow] { r => id.setLong(0, next); next += 1; project(joined(r, id)) }
+    }
+    GraftFrames.ofRows(df.sparkSession, schema, ids, counts.sum)
+  }
 
   /** Content fingerprint of a source table's file(s). */
   def fingerprint(sfDir: String, name: String): String =
@@ -286,19 +315,17 @@ object Tables {
   }
 
   /** Execute a batch-bounded query path under the small-data conf scope
-    * and pin its result (r15) — the shared implementation of the
-    * graph-kernel discipline (copurchaseTriangles) now applied to the
-    * index-probe families (LSH text index, IVFADC vector index).
-    * Rationale, measured on the probe plans: these dataflows shuffle
-    * only batch/candidate/model-bounded relations — never the corpus —
-    * yet at the session's core-count fan-out every exchange ran 32
-    * tasks of ~nothing and AQE materialized each as its own job; the
+    * and pin its result: the graph-kernel discipline (copurchaseTriangles)
+    * applied to the index-probe families (LSH text index, IVFADC vector
+    * index). Rationale, measured on the probe plans: these dataflows
+    * shuffle only batch/candidate/model-bounded relations — never the
+    * corpus — yet at the session's core-count fan-out every exchange ran
+    * 32 tasks of ~nothing and AQE materialized each as its own job; the
     * job floor was the dominant cost. The scope's partition count sizes
     * the shuffles to the data they actually carry; it is a CONF
-    * (`spark.graft.probe.parallelism`, r16 — the r15 advice) so a real
-    * deployment sizes it to its daily batch / candidate volume instead
-    * of this fixture's default of 8. Scale caveat, stated honestly
-    * (r15 advice): AQE is off inside the scope, so joins keep their
+    * (`spark.graft.probe.parallelism`) so a real deployment sizes it to
+    * its daily batch / candidate volume instead of this fixture's default
+    * of 8. Scale caveat: AQE is off inside the scope, so joins keep their
     * statically planned strategy — at THIS fixture's scale the
     * index/codes side is broadcast by the static planner (measured in
     * the probe plans); a deployment whose index side outgrows

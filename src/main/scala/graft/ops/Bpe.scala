@@ -233,9 +233,8 @@ object Bpe extends OpGroup {
     * (doc, word, count) relation back to the encoded vocab and
     * re-aggregating — explode-once, never a per-document re-encode.
     * Token ids are assigned deterministically over the emergent symbol
-    * vocabulary via the tokenMasks numbering discipline
-    * (range-partition + sort + zipWithIndex — no single-partition
-    * stage): id order = UTF-8 byte order of the token string, which
+    * vocabulary by [[Tables.numbered]] (no single-partition stage):
+    * id order = UTF-8 byte order of the token string, which
     * BpeSpec's independent tokenizer re-derives exactly. No SQL oracle
     * (the K chained merge states are the trainer's non-expressibility,
     * inherited); BpeSpec pins per-(doc, token) multiset equality
@@ -255,18 +254,11 @@ object Bpe extends OpGroup {
       val encoded = wordCounts.select("w").distinct().as[String]
         .map(w => (w, encodeWord(w, merges)))
         .toDF("w", "toks")
-      // Deterministic global token ids: range-partition + sort +
-      // zipWithIndex over the emergent symbol vocabulary (chars + up
-      // to K merged symbols + </w> — tiny, but numbered with the same
-      // no-single-partition discipline as the corpus-sized vocabs).
-      val distinctToks = encoded.select(explode(col("toks")).as("token")).distinct()
-        .repartitionByRange(col("token")).sortWithinPartitions("token")
-      val idSchema = distinctToks.schema.add("token_id", org.apache.spark.sql.types.LongType)
-      val tokenIds = s.createDataFrame(
-        distinctToks.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-        },
-        idSchema)
+      // Deterministic global token ids over the emergent symbol
+      // vocabulary (chars + up to K merged symbols + </w> — tiny, but
+      // numbered the same way as the corpus-sized vocabs).
+      val tokenIds = Tables.numbered(encoded.select(explode(col("toks")).as("token")).distinct(),
+        "token_id", 0L, col("token"))
       wordCounts.join(encoded, "w")
         .select(col("doc_id"), col("wcnt"), explode(col("toks")).as("token"))
         .groupBy("doc_id", "token").agg(sum("wcnt").as("cnt"))

@@ -91,9 +91,7 @@ object Clusters extends OpGroup {
     // dominates sub-million-row shuffles at core-count fan-out. At real
     // scale this constant is sized to the edge volume instead. Restored
     // before returning.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    Tables.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
     val maps = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var rounds = 0
     // Bounded-tail endgame threshold: once the contracted graph fits in
@@ -180,12 +178,11 @@ object Clusters extends OpGroup {
     // Materialize the small final table (|nodes| rows of two longs) off
     // the loop's lineage before the scope frees every intermediate.
     ResultPins.swap(spark, s"cc:$pinKey", labels)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     }
   }
 
-  /** INCREMENTAL COMPONENT MERGE (r14; restructured r15, the r14
-    * verdict's item 1 — shared by the embedding-side
+  /** INCREMENTAL COMPONENT MERGE (shared by the embedding-side
     * `dedup_semantic_clusters_append` and the text-side
     * `dedup_cluster_cc_append`): fold a batch's verified edges into a
     * persisted (node, label) assignment at LABEL granularity. Each new
@@ -200,13 +197,12 @@ object Clusters extends OpGroup {
     * recompute. Both append keys carry their full-recompute key's own
     * DuckDB oracle.
     *
-    * The r14 formulation carried affected components into CC as
-    * member→label star edges, which is O(touched members): on the
-    * dup-dense fixture (one component spans ~86% of docs) the
-    * maintenance cost INVERTED — 10.4 s vs the 5.7 s full recompute it
-    * was meant to amortize (the r14 verdict's weak grade). Label
-    * contraction removes that regime entirely instead of guarding it
-    * with a fallback threshold: work is O(|batch edges| + |touched
+    * Carrying affected components into CC as member→label star edges
+    * is O(touched members): on the dup-dense fixture (one component
+    * spans ~86% of docs) that maintenance cost 10.4 s against the 5.7 s
+    * full recompute it was meant to amortize. Label contraction
+    * removes that regime entirely instead of guarding it with a
+    * fallback threshold: work is O(|batch edges| + |touched
     * labels|) regardless of how big the touched components are — the
     * same reason min-contraction CC contracts before it iterates
     * (Kiveris et al. 2014). Untouched components never leave the
@@ -216,9 +212,8 @@ object Clusters extends OpGroup {
     *
     * The contracted edge set is the only consumer of the (expensive)
     * verified-edge pipeline, and it is pinned here — callers must NOT
-    * pre-checkpoint newEdges (r15: the r14 edge checkpoints were paying
-    * a second materialization of a 190k-row relation that the
-    * contraction immediately shrinks to ~10³).
+    * pre-pin newEdges: that pays a second materialization of a
+    * 190k-row relation that the contraction shrinks to ~10³ rows.
     *
     * @return (untouched, subNodes, mergeEdges, merged) — the first
     *         three are the bounded-work witness seams the append specs
@@ -240,7 +235,7 @@ object Clusters extends OpGroup {
     // near-dup), canonicalize u < v so distinct dedups mirrors. Pinned:
     // this is the single materialization of the whole probe/pairing
     // pipeline, and both CC and the touched-label set read it.
-    val contracted = graft.ResultPins.swapCheckpoint(s"$pinKey:contracted",
+    val contracted = ResultPins.swap(s, s"$pinKey:contracted",
       newEdges
         .join(nodeLabel.select(col("node").as("u"), col("label").as("lu")), Seq("u"))
         .join(nodeLabel.select(col("node").as("v"), col("label").as("lv")), Seq("v"))
@@ -258,7 +253,7 @@ object Clusters extends OpGroup {
     // distributed loop remains the fallback for a pathological batch
     // whose contracted graph is still huge.
     val labelMap =
-      if (contracted.count() <= (1L << 21))
+      if (ResultPins.rowCount(contracted) <= (1L << 21))
         s.createDataFrame(driverUnionFind(
           contracted.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()))
           .toDF("label", "l")
@@ -542,7 +537,7 @@ object Clusters extends OpGroup {
     val edges = Tables.parquet(s, s"$dir/full/edges")
     // Touched labels: tiny (≤ |retired|), pinned for its three
     // consumers; broadcast by AQE in each.
-    val touchedLabels = graft.ResultPins.swapCheckpoint(
+    val touchedLabels = ResultPins.swap(s,
       s"dedup_cluster_cc_delete:touched@$sf",
       assign.join(retired.select(col("doc_id").as("node")), "node")
         .select("label").distinct())

@@ -78,25 +78,11 @@ object Dedup extends OpGroup {
     */
   private[ops] def tokenMasks(s: SparkSession, sf: String): (DataFrame, org.apache.spark.sql.Column) = {
     val tok = docTokens(s, sf)
-    // Dense bit assignment via zipWithIndex partition offsets — any
-    // word→bit BIJECTION yields identical popcount-Jaccard, so no
-    // single-partition window is needed; only the per-partition counts
-    // cross the driver. BUT the bijection must be STABLE across
-    // recomputations: the masks relation is consumed twice (a/b sides of
-    // the pair join), and distinct()'s within-partition order varies with
-    // shuffle fetch order on a recompute or stage retry — so the words
-    // are range-partitioned and sorted before numbering (deterministic
-    // global order, still no single-partition stage).
-    val vocab = {
-      val distinctWords = tok.select("word").distinct()
-        .repartitionByRange(col("word")).sortWithinPartitions("word")
-      val schema = distinctWords.schema.add("bit", org.apache.spark.sql.types.LongType)
-      s.createDataFrame(
-        distinctWords.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-        },
-        schema)
-    }
+    // Dense bit assignment: any word→bit BIJECTION yields identical
+    // popcount-Jaccard, so the words are numbered in parallel
+    // ([[Tables.numbered]]); the masks relation is read twice (a/b sides
+    // of the pair join), which is why that numbering must be stable.
+    val vocab = numberWords(tok, 0L)
     val maskWords = ((vocab.count() + 63) / 64).toInt
     // No broadcast hint on the dictionary: the distinct-words relation is
     // corpus-vocabulary-sized — unbounded at web scale — so a forced hint
@@ -843,28 +829,19 @@ object Dedup extends OpGroup {
           .as(Seq("band_idx", "bkey")))
   }
 
-  /** Deterministic word→bit numbering starting at `offset`: the
-    * tokenMasks stability discipline (range-partition + sort +
-    * zipWithIndex — no single-partition stage). offset > 0 is the r13
-    * append path extending a base dictionary append-only.
+  /** Deterministic word→bit numbering of `words`' distinct words, in
+    * word order, starting at `offset`. offset > 0 extends a base
+    * dictionary append-only.
     */
-  private def numberWords(s: SparkSession, words: DataFrame, offset: Long): DataFrame = {
-    val distinctWords = words.select("word").distinct()
-      .repartitionByRange(col("word")).sortWithinPartitions("word")
-    val schema = distinctWords.schema.add("bit", org.apache.spark.sql.types.LongType)
-    s.createDataFrame(
-      distinctWords.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (offset + i))
-      },
-      schema)
-  }
+  private def numberWords(words: DataFrame, offset: Long): DataFrame =
+    Tables.numbered(words.select("word").distinct(), "bit", offset, col("word"))
 
   private[graft] def lshIndexFresh(s: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val baseTok = docTokens(s, sf).filter(pmod(col("doc_id"), lit(2)) === 0)
     val bands = bandKeys(baseTok)
     // word→bit dictionary over the BASE vocabulary.
-    val vocab = numberWords(s, baseTok, 0L)
+    val vocab = numberWords(baseTok, 0L)
     (bands, lshMasks(baseTok, vocab), vocab)
   }
 
@@ -1041,8 +1018,8 @@ object Dedup extends OpGroup {
     *    file set is untouched — and the serve path unions the two
     *    generation roots, band-pruned on each);
     *  - the word→bit dictionary EXTENDS append-only (new words numbered
-    *    after the base count via the same deterministic
-    *    range-partition + zipWithIndex discipline), so every base mask
+    *    after the base count by the same deterministic
+    *    [[Tables.numbered]]), so every base mask
     *    stays valid bit-for-bit while batch-only words still get bits —
     *    without this, two ingest docs sharing an out-of-base-vocab word
     *    would undercount their intersection (the base-era "OOV is never
@@ -1106,7 +1083,7 @@ object Dedup extends OpGroup {
     val batchTok = docTokens(s, sf)
       .filter(pmod(col("doc_id"), lit(4)) === (2 * g - 1))
     val baseBits = priorVocab.count() // bounded: one scalar, the dictionary size
-    numberWords(s,
+    numberWords(
       batchTok.join(priorVocab.select("word"), Seq("word"), "left_anti"),
       baseBits)
       .write.mode("overwrite").parquet(s"$tmp/vocab")

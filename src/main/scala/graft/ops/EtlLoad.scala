@@ -21,11 +21,8 @@ object EtlLoad extends OpGroup {
     * winner is the smallest doc_id (preference order), and surrogate
     * entity ids are the global rank in hash order — deterministic and
     * dense, the batch analog of a sequence column — assigned WITHOUT a
-    * single-partition window: range-partition + partition-local sort
-    * puts the data in global order across partitions, then zipWithIndex
-    * numbers each partition from the sum of the preceding partitions'
-    * counts (only the per-partition counts cross the driver). Every
-    * stage stays parallel at 100 TB.
+    * single-partition window ([[Tables.numbered]]). Every stage stays
+    * parallel at 100 TB.
     */
   private val dedupLoad = Op(
     "etl_dedup_load",
@@ -39,14 +36,7 @@ object EtlLoad extends OpGroup {
           min(col("doc_id")).as("canonical_doc_id"),
           count(lit(1)).as("n_members"),
         )
-      val ordered = entities
-        .repartitionByRange(col("canon_hash"))
-        .sortWithinPartitions(col("canon_hash"))
-      val withIds = s.createDataFrame(
-        ordered.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-        },
-        ordered.schema.add("entity_id", org.apache.spark.sql.types.LongType))
+      val withIds = Tables.numbered(entities, "entity_id", 1L, col("canon_hash"))
       // Attach the winner's attributes (the "loaded" entity row).
       withIds.join(
           staged.select(col("doc_id").as("canonical_doc_id"), col("lang"), col("source")),

@@ -306,15 +306,14 @@ object Sampling extends OpGroup {
     Some("""SELECT doc_id, CAST((start - 1) // 40 AS INT) AS chunk_id, CAST(start AS INT) AS start_tok, CAST(len(list_slice(toks, start, start + 49)) AS INT) AS chunk_len, md5(array_to_string(list_slice(toks, start, start + 49), ' ')) AS chunk_hash FROM (SELECT doc_id, string_split(text, ' ') AS toks, len(string_split(text, ' ')) AS n_tok FROM documents) d, LATERAL (SELECT unnest(generate_series(1, GREATEST(n_tok, 1), 40)) AS start) g ORDER BY doc_id, chunk_id"""),
   )
 
-  /** BALANCED TOKEN SHARDING (r11) — assign docs to 8 training shards
+  /** BALANCED TOKEN SHARDING — assign docs to 8 training shards
     * with near-equal token mass, the job that splits a curated corpus
     * into worker files: docs rank by token count (descending, doc_id
     * tiebreak) and take shards in SNAKE order (longest-processing-time
     * heuristic: row k of each 8-row wave reverses direction, so no
-    * shard accumulates only heads or only tails). The global rank uses
-    * range-partition + sortWithinPartitions + zipWithIndex (the
-    * tokenMasks numbering discipline) — a deterministic total order
-    * with NO single-partition window over the corpus. Output is the
+    * shard accumulates only heads or only tails). The global rank is
+    * [[Tables.numbered]]: a deterministic total order with NO
+    * single-partition window over the corpus. Output is the
     * 8-row shard audit: doc count, token mass, and each shard's ratio
     * to the mean mass (the imbalance number the job alerts on).
     */
@@ -326,17 +325,7 @@ object Sampling extends OpGroup {
       val sized = Tables.documents(s, sf)
         .select(col("doc_id"),
           expr("size(filter(split(text, ' '), w -> w != ''))").cast("long").as("n_tok"))
-      val ranked = {
-        val sorted = sized
-          .repartitionByRange(col("n_tok").desc, col("doc_id"))
-          .sortWithinPartitions(col("n_tok").desc, col("doc_id"))
-        val schema = sorted.schema.add("rk", org.apache.spark.sql.types.LongType)
-        s.createDataFrame(
-          sorted.rdd.zipWithIndex().map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-          },
-          schema)
-      }
+      val ranked = Tables.numbered(sized, "rk", 0L, col("n_tok").desc, col("doc_id"))
       val assigned = ranked
         .withColumn("wave", (col("rk") / nShards).cast("long"))
         .withColumn("pos", pmod(col("rk"), lit(nShards)))

@@ -1263,7 +1263,7 @@ object Vectors extends OpGroup {
     val retired = Tables.parquet(s, s"$dir/sem_tombstones/ids")
     val assign = Tables.parquet(s, s"$dir/full/assign")
     val edges = Tables.parquet(s, s"$dir/full/edges")
-    val touchedLabels = graft.ResultPins.swapCheckpoint(
+    val touchedLabels = graft.ResultPins.swap(s,
       s"dedup_semantic_clusters_delete:touched@$sf",
       assign.join(retired.select(col("vec_id").as("node")), "node")
         .select("label").distinct())

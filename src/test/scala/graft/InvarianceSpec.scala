@@ -6,11 +6,14 @@ import org.apache.spark.sql.SparkSession
   * multiset of rows with `GatherSmallPlan` on (a GraftExtensions session)
   * and off (the plain session), each at 1 and at 4 shuffle partitions.
   * Besides the interactive panel, the keys cover a global aggregate with
-  * distinct counts, a window with no partition key and an outer join.
+  * distinct counts, a window with no partition key, an outer join, and
+  * two keys that plan over result pins, whose exact statistics let the
+  * gather reach them (a graph kernel and a connected-components delete).
   */
 class InvarianceSpec extends SparkSpec {
   private val keys = PlanShapeSpec.panel ++
-    Seq("agg_group_summary", "agg_count_distinct", "win_cumulative_distinct", "join_full_outer_recon")
+    Seq("agg_group_summary", "agg_count_distinct", "win_cumulative_distinct", "join_full_outer_recon",
+      "graph_2hop_reach", "dedup_cluster_cc_delete")
 
   private def rows(s: SparkSession, key: String, partitions: Int): Seq[String] = {
     val conf = "spark.sql.shuffle.partitions"

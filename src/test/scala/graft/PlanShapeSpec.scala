@@ -231,6 +231,41 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("a sort over a result pin is gathered, and the pin reports its exact row count") {
+    withGraftSession { ext =>
+      for (key <- Seq("graph_2hop_reach", "vec_pq_index_delete")) {
+        val df = SparkEntry.queries(key)(ext, sf)
+        val plan = finalPlan(df)
+        assert(!rangeSorts(plan) && plan.contains("Coalesce 1"),
+          s"$key's output sort over its pin is not gathered:\n$plan")
+        val pins = df.queryExecution.optimizedPlan.collectLeaves().collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l
+        }
+        assert(pins.size == 1, s"$key: expected one pinned leaf:\n${df.queryExecution.optimizedPlan}")
+        val n = df.count()
+        assert(n > 0, s"$key returned no rows: the row count proves nothing")
+        assert(pins.head.stats.rowCount.contains(BigInt(n)),
+          s"$key: the pin reports ${pins.head.stats} for $n rows")
+      }
+    }
+  }
+
+  test("a numbered frame numbers its rows in order from the offset and reports its row count") {
+    withGraftSession { ext =>
+      import org.apache.spark.sql.functions.col
+      // x = 7·id mod 50 is a permutation of 0..49, spread over 3 partitions.
+      val src = ext.range(0, 50).select((col("id") * 7 % 50).as("x")).repartition(3)
+      val df = Tables.numbered(src, "n", 5L, col("x"))
+      assert(df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(50)),
+        s"the numbered frame reports ${df.queryExecution.optimizedPlan.stats}")
+      val sorted = df.orderBy("n")
+      val plan = finalPlan(sorted)
+      assert(!rangeSorts(plan), s"a sort over the numbered frame kept its range exchange:\n$plan")
+      assert(sorted.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+        (0 until 50).map(i => (i.toLong, i + 5L)))
+    }
+  }
+
   test("a large or self-repartitioned sort input keeps its range exchange") {
     withGraftSession { ext =>
       import org.apache.spark.sql.functions.col
