@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical.{Expand, Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan, Project, RebalancePartitions, Repartition, RepartitionOperation, SHUFFLE_HASH, Sort, Subquery, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.{ExplodeDnf, FloatVecDot, MaskIntersect, SimHash60, VecTopK}
+import graft.functions.{ExplodeDnf, FloatVecDot, MaskIntersect, SimHash60, VecNearest, VecTopK}
 
 /** Session-extension entry point: registers the engine's custom Catalyst
   * expressions and the [[GatherSmallPlan]] optimizer rule at session
@@ -35,6 +35,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         checkArity("vec_dot", "vec_dot(a ARRAY<FLOAT>, b ARRAY<FLOAT>)", 2, children)
         FloatVecDot(children.head, children(1))
+      },
+    ))
+    ext.injectFunction((
+      FunctionIdentifier("vec_nearest"),
+      new ExpressionInfo(classOf[VecNearest].getName, "vec_nearest"),
+      (children: Seq[Expression]) => {
+        checkArity("vec_nearest", VecNearest.signature, 5, children)
+        VecNearest(children(0), children(1), children(2), children(3), children(4))
       },
     ))
     ext.injectFunction((

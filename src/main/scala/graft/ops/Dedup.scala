@@ -81,9 +81,10 @@ object Dedup extends OpGroup {
     // Dense bit assignment: any word→bit BIJECTION yields identical
     // popcount-Jaccard, so the words are numbered in parallel
     // ([[Tables.numbered]]); the masks relation is read twice (a/b sides
-    // of the pair join), which is why that numbering must be stable.
+    // of the pair join), which is why that numbering must be stable. The
+    // numbered frame carries its row count, so sizing the masks runs no job.
     val vocab = numberWords(tok, 0L)
-    val maskWords = ((vocab.count() + 63) / 64).toInt
+    val maskWords = ((ResultPins.rowCount(vocab) + 63) / 64).toInt
     // No broadcast hint on the dictionary: the distinct-words relation is
     // corpus-vocabulary-sized — unbounded at web scale — so a forced hint
     // would override the statistics that correctly flip this to a shuffle

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Op, OpGroup, Tables}
-import graft.functions.FloatVecDot
+import graft.functions.{FloatVecDot, VecNearest}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -298,31 +298,34 @@ object Vectors extends OpGroup {
     Some("""WITH v AS (SELECT vec_id, sqrt(list_reduce(list_transform(embedding[1:16], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS tnorm, sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS fnorm FROM embeddings) SELECT vec_id, ROUND(1e-9 + tnorm, 6) AS trunc_norm, ROUND(1e-9 + tnorm / NULLIF(fnorm, 0), 6) AS energy_share FROM v ORDER BY vec_id"""),
   )
 
-  /** PRODUCT QUANTIZATION over IVF RESIDUALS (r6, residual-encoded r7)
-    * — the IVFADC index of Jégou et al. 2011 §III (public): a coarse
-    * quantizer (Kc = 16 full-dimension centroids, 2 Lloyd iterations)
-    * absorbs the vector's position, and PQ encodes only the RESIDUAL
-    * x − c(x) — M = 8 subspaces of 8 dims, K = 256 entries each (the
-    * paper's one-byte-per-subspace default), 2 Lloyd iterations. Every
-    * vector compresses to a 4-bit cell id + 8 bytes of codes.
-    * Residual encoding + the byte-wide codebook lifted recall@5 vs
-    * exact L2 on the spec's gaussian fixture from 0.20 (r6's direct
-    * 8×16 PQ) to ≈0.5. Distributed shape: subvectors for ALL subspaces
-    * explode into ONE relation keyed (vec_id, m), so every training
-    * step — deterministic modulo seeding, nearest-centroid assignment
-    * (L2² = |x|²−2x·c+|c|², the codegen vec_dot kernel, min-struct
-    * aggregation rather than a rank window), per-(m, cid) re-averaging
-    * — runs for all 8 codebooks in the SAME jobs; no per-subspace
-    * loop. Codebook means accumulate as exact DECIMAL(38,12) sums
-    * divided by count (never avg(double)): partial-aggregation merge
-    * order cannot perturb a ulp, so training is order-free BY
-    * CONSTRUCTION (the r6 parity discipline applied to training). The
-    * ≤2048-row codebook localCheckpoints between iterations (tiny
-    * shuffles at few partitions, lineage truncated, training eager /
-    * search lazy). No oracle (trained quantizer is engine-specific);
-    * VectorSpec asserts code range, per-vector completeness,
-    * determinism, recall@5 ≥ 0.4, and that the trained codebook
-    * reconstructs strictly better than the 1-centroid baseline.
+  /** PRODUCT QUANTIZATION over IVF RESIDUALS — the IVFADC index of
+    * Jégou et al. 2011 §III (public): a coarse quantizer (Kc = 16
+    * full-dimension centroids, 2 Lloyd iterations) absorbs the vector's
+    * position, and PQ encodes only the RESIDUAL x − c(x) — M = 8
+    * subspaces of 8 dims, K = 256 entries each (the paper's
+    * one-byte-per-subspace default), 2 Lloyd iterations. Every vector
+    * compresses to a 4-bit cell id + 8 bytes of codes. Residual encoding
+    * + the byte-wide codebook give recall@5 ≈0.5 vs exact L2 on the
+    * spec's gaussian fixture (direct 8×16 PQ gave 0.20). Distributed
+    * shape: subvectors for ALL subspaces explode into ONE relation keyed
+    * (vec_id, m), so every training step — deterministic modulo
+    * seeding, nearest-centroid assignment, per-(m, cid) re-averaging —
+    * runs for all 8 codebooks in the SAME jobs; no per-subspace loop.
+    * Assignment (the encode) is a narrow map: each (vec_id, m) row meets
+    * its subspace's whole codebook as ONE broadcast row of cid-sorted
+    * arrays, and the codegen [[graft.functions.VecNearest]] kernel scans
+    * the K entries for the argmin of L2² = |x|²−2x·c+|c|² (ties to the
+    * smallest id) — no n·M·K candidate rows, no shuffle, no sort; the
+    * codebook is bounded by M·K and never grows with the corpus.
+    * Codebook means accumulate as exact DECIMAL(38,12) sums divided by
+    * count (never avg(double)): partial-aggregation merge order cannot
+    * perturb a ulp, so training is order-free BY CONSTRUCTION. The
+    * ≤2048-row codebook localCheckpoints between iterations (lineage
+    * truncated, training eager / search lazy). No oracle (trained
+    * quantizer is engine-specific); VectorSpec asserts code range,
+    * per-vector completeness, determinism, recall@5 ≥ 0.4, and that the
+    * trained codebook reconstructs strictly better than the 1-centroid
+    * baseline.
     */
   private[graft] val PqM = 8
   private[graft] val PqK = 256
@@ -341,16 +344,31 @@ object Vectors extends OpGroup {
     .agg(expr("transform(sort_array(collect_list(struct(pos, cv))), s -> cast(s.cv as float))").as(outVec))
     .withColumn(outNrm2, expr(s"vec_dot($outVec, $outVec)"))
 
-  /** Nearest coarse cell per vector (broadcast Kc rows, min-struct with
-    * ccid tie break), carrying the full embedding through.
+  /** A codebook relation folded into one row per `keys` group (one row
+    * in all when `keys` is empty): entry ids, centroids flattened end to
+    * end and squared norms as id-sorted arrays — the codebook operand of
+    * [[graft.functions.VecNearest]].
     */
-  private def pqNearestCoarse(emb: DataFrame, coarse: DataFrame): DataFrame = emb
-    .withColumn("enrm2", expr("vec_dot(embedding, embedding)"))
-    .crossJoin(broadcast(coarse))
-    .withColumn("d2", col("enrm2") - lit(2.0) * expr("vec_dot(embedding, ccvec)") + col("ccnrm2"))
-    .groupBy(col("vec_id"))
-    .agg(min(struct(col("d2"), col("ccid"), col("embedding"))).as("b"))
-    .select(col("vec_id"), col("b.ccid").as("ccid"), col("b.embedding").as("embedding"))
+  private def pqBook(cb: DataFrame, keys: Seq[String], id: String, vec: String,
+      nrm2: String): DataFrame = cb
+    .groupBy(keys.map(col): _*)
+    .agg(sort_array(collect_list(struct(col(id), col(vec), col(nrm2)))).as("e"))
+    .select(keys.map(col) ++ Seq(col(s"e.$id").as("ids"), flatten(col(s"e.$vec")).as("cents"),
+      col(s"e.$nrm2").as("cnrm2s")): _*)
+
+  /** Nearest coarse cell per vector (ccid tie break), carrying the full
+    * embedding through: the Kc-cell book is one broadcast row and
+    * vec_nearest scans it per vector.
+    */
+  private[graft] def pqNearestCoarse(emb: DataFrame, coarse: DataFrame): DataFrame = {
+    VecNearest.register(emb.sparkSession)
+    emb
+      .withColumn("enrm2", expr("vec_dot(embedding, embedding)"))
+      .crossJoin(broadcast(pqBook(coarse, Nil, "ccid", "ccvec", "ccnrm2")))
+      .select(col("vec_id"), expr("vec_nearest(embedding, enrm2, ids, cents, cnrm2s)").as("b"),
+        col("embedding"))
+      .select(col("vec_id"), col("b.id").as("ccid"), col("embedding"))
+  }
 
   /** Train the Kc-cell coarse quantizer on the raw vectors
     * (deterministic modulo seeding, 2 Lloyd iterations, decimal means);
@@ -360,16 +378,14 @@ object Vectors extends OpGroup {
     val emb = Tables.embeddings(s, sf).select(col("vec_id"), col("embedding"))
     def cmean(assigned: DataFrame): DataFrame =
       decimalMean(assigned, Seq("ccid"), "embedding", "ccvec", "ccnrm2")
-    graft.Tables.withConfs(s, Seq("spark.sql.shuffle.partitions" -> "8")) {
-      var c = cmean(emb.withColumn("ccid", pmod(col("vec_id"), lit(PqCoarseK)).cast("int")))
-        .localCheckpoint()
-      for (_ <- 1 to 2) {
-        val prev = c
-        c = cmean(pqNearestCoarse(emb, c)).localCheckpoint()
-        graft.ResultPins.releaseCheckpoint(prev)
-      }
-      c
+    var c = cmean(emb.withColumn("ccid", pmod(col("vec_id"), lit(PqCoarseK)).cast("int")))
+      .localCheckpoint()
+    for (_ <- 1 to 2) {
+      val prev = c
+      c = cmean(pqNearestCoarse(emb, c)).localCheckpoint()
+      graft.ResultPins.releaseCheckpoint(prev)
     }
+    c
   }
 
   /** Residual-subvector relation under a given coarse quantizer: one
@@ -388,35 +404,35 @@ object Vectors extends OpGroup {
       .withColumn("snrm2", expr("vec_dot(sv, sv)"))
   }
 
-  /** Nearest-codebook-entry assignment per (vec_id, m): L2² via the
-    * codegen vec_dot kernel; min-struct aggregation (cid-ascending tie
-    * break) instead of a rank window — partial-aggregable, no sort.
+  /** Nearest-codebook-entry assignment per (vec_id, m) (cid tie
+    * break): `sub` broadcast-joins the M per-subspace book rows on m and
+    * vec_nearest scans the K entries — a narrow map over `sub`.
     */
-  private[graft] def pqNearest(sub: DataFrame, cb: DataFrame): DataFrame = sub
-    .join(broadcast(cb), "m")
-    .withColumn("d2", col("snrm2") - lit(2.0) * expr("vec_dot(sv, cvec)") + col("cnrm2"))
-    .groupBy(col("vec_id"), col("m"))
-    .agg(min(struct(col("d2"), col("cid"), col("ccid"), col("sv"))).as("b"))
-    .select(col("vec_id"), col("m"), col("b.cid").as("cid"), col("b.ccid").as("ccid"),
-      col("b.sv").as("sv"), col("b.d2").as("d2"))
+  private[graft] def pqNearest(sub: DataFrame, cb: DataFrame): DataFrame = {
+    VecNearest.register(sub.sparkSession)
+    sub
+      .join(broadcast(pqBook(cb, Seq("m"), "cid", "cvec", "cnrm2")), "m")
+      .select(col("vec_id"), col("m"), col("ccid"), col("sv"),
+        expr("vec_nearest(sv, snrm2, ids, cents, cnrm2s)").as("b"))
+      .select(col("vec_id"), col("m"), col("b.id").as("cid"), col("ccid"), col("sv"),
+        col("b.d2").as("d2"))
+  }
 
   /** Train the M × K residual codebook (2 Lloyd iterations,
     * deterministic modulo seeding, decimal means); ≤ M·K rows
     * (m, cid, cvec, cnrm2), localCheckpointed per iteration.
     */
-  private[graft] def pqTrain(s: SparkSession, sub: DataFrame): DataFrame = {
+  private[graft] def pqTrain(sub: DataFrame): DataFrame = {
     def mean(assigned: DataFrame): DataFrame =
       decimalMean(assigned, Seq("m", "cid"), "sv", "cvec", "cnrm2")
-    graft.Tables.withConfs(s, Seq("spark.sql.shuffle.partitions" -> "8")) {
-      var c = mean(sub.withColumn("cid", pmod(col("vec_id"), lit(PqK)).cast("int"))
-        .select(col("m"), col("cid"), col("sv"))).localCheckpoint()
-      for (_ <- 1 to 2) {
-        val prev = c
-        c = mean(pqNearest(sub, c).select(col("m"), col("cid"), col("sv"))).localCheckpoint()
-        graft.ResultPins.releaseCheckpoint(prev)
-      }
-      c
+    var c = mean(sub.withColumn("cid", pmod(col("vec_id"), lit(PqK)).cast("int"))
+      .select(col("m"), col("cid"), col("sv"))).localCheckpoint()
+    for (_ <- 1 to 2) {
+      val prev = c
+      c = mean(pqNearest(sub, c).select(col("m"), col("cid"), col("sv"))).localCheckpoint()
+      graft.ResultPins.releaseCheckpoint(prev)
     }
+    c
   }
 
   /** Training-pass counter — spec instrumentation for the persistence
@@ -428,11 +444,9 @@ object Vectors extends OpGroup {
 
   /** One training pass: coarse quantizer + residual codebook + the
     * subvector relation they both index — so ops never train twice.
-    * The subvector relation materializes ONCE (localCheckpoint) at full
-    * fan-out: every Lloyd iteration joins it against K = 256 codebook
-    * rows (n·M·K candidate rows — the heavy stage now that codebooks
-    * are byte-wide), so it must neither recompute per eager step nor
-    * sit at the training shuffles' deliberately small partition count.
+    * The subvector relation materializes ONCE (localCheckpoint): every
+    * Lloyd iteration and every encode maps over it, so it must not
+    * recompute per eager step.
     *
     * The trained model MEMOIZES per (session, sfDir, embeddings
     * fingerprint) in [[graft.ResultPins.memo]]: an index is built once
@@ -451,8 +465,8 @@ object Vectors extends OpGroup {
       FloatVecDot.register(s)
       pqTrainCounter.incrementAndGet()
       val coarse = pqCoarse(s, sf)
-      val sub = pqSubvectors(s, sf, coarse).repartition(32).localCheckpoint()
-      (coarse, sub, pqTrain(s, sub))
+      val sub = pqSubvectors(s, sf, coarse).localCheckpoint()
+      (coarse, sub, pqTrain(sub))
     }
 
   private[graft] def pqAssign(s: SparkSession, sf: String): DataFrame = {

@@ -8,17 +8,21 @@ import org.apache.spark.sql.SparkSession
   * Besides the interactive panel, the keys cover a global aggregate with
   * distinct counts, a window with no partition key, an outer join, and
   * two keys that plan over result pins, whose exact statistics let the
-  * gather reach them (a graph kernel and a connected-components delete).
+  * gather reach them (a graph kernel and a connected-components delete),
+  * and the PQ codes, whose training and encode rerun under each setting.
   */
 class InvarianceSpec extends SparkSpec {
   private val keys = PlanShapeSpec.panel ++
     Seq("agg_group_summary", "agg_count_distinct", "win_cumulative_distinct", "join_full_outer_recon",
-      "graph_2hop_reach", "dedup_cluster_cc_delete")
+      "graph_2hop_reach", "dedup_cluster_cc_delete", "vec_pq_codes")
 
   private def rows(s: SparkSession, key: String, partitions: Int): Seq[String] = {
     val conf = "spark.sql.shuffle.partitions"
     val before = s.conf.get(conf)
     s.conf.set(conf, partitions.toString)
+    // The trained PQ model is memoized per session: forget it so each
+    // setting trains and encodes under its own partitioning.
+    ResultPins.forget("pq")
     try SparkEntry.queries(key)(s, sf).collect().map(_.toString).toSeq.sorted
     finally s.conf.set(conf, before)
   }

@@ -266,6 +266,34 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** Every node of an executed plan, AQE query stages included. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+
+  test("vec_pq_codes encodes as a narrow map: no sort aggregate, one vec_nearest per row") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    val df = SparkEntry.queries("vec_pq_codes")(spark, sf)
+    df.collect()
+    val plan = nodes(df.queryExecution.executedPlan)
+    assert(!plan.exists(_.isInstanceOf[SortAggregateExec]) && plan.count(_.isInstanceOf[SortExec]) == 1,
+      s"the encode sorts below its output sort:\n${df.queryExecution.executedPlan}")
+    // With both struct fields read, vec_nearest is still evaluated once
+    // per (vec_id, m) row, in a projection, never in a join condition.
+    val (_, sub, cb) = ops.Vectors.pqModel(spark, sf)
+    val assign = ops.Vectors.pqNearest(sub, cb)
+    assign.collect()
+    val holders = nodes(assign.queryExecution.executedPlan).collect {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.VecNearest])) =>
+        p.expressions.map(_.collect { case v: graft.functions.VecNearest => v }.size).sum -> p.nodeName
+    }
+    assert(holders == Seq(1 -> "Project"), s"vec_nearest evaluated as $holders:\n${assign.queryExecution.executedPlan}")
+  }
+
   test("a large or self-repartitioned sort input keeps its range exchange") {
     withGraftSession { ext =>
       import org.apache.spark.sql.functions.col
